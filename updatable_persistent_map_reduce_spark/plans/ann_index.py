@@ -237,21 +237,12 @@ class IvfIndex:
         cosine + per-query window as the brute-force baseline.
         ``nprobe >= n_cells`` probes everything — exact search.
 
-        Runs under a derived maintenance scope sized from the index's
-        table bytes and materializes the (bounded: k x queries) top-k
-        inside it: unscoped, the caller's collect fanned into 4-7 AQE
-        stage jobs for a bench-scale probe; a big index leaves the
-        session untouched (shrink-only), the 100 TB path. Identical
-        rows either way."""
-        with maintenance_scope(self.spark, maintenance_n(None, self._listed)):
-            return self._search_inner(queries, k, nprobe)
-
-    def _search_inner(
-        self,
-        queries: list[tuple[int, list[float]]],
-        k: int,
-        nprobe: int,
-    ) -> DataFrame:
+        Returns the lazy serving plan (broadcast probe frame, cell
+        equi-join, per-query top-k window): its scan is the probed
+        cells' manifest-resolved files, so ``inputFiles()`` attests the
+        pruning. There is no internal collect, so no maintenance scope
+        is involved and the plan runs under the session's full AQE
+        configuration."""
         cents = self.centroids()
         qmat = np.array([v for _, v in queries], dtype=np.float64)
         qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
@@ -272,7 +263,7 @@ class IvfIndex:
             "query_id long, qe array<float>, cell int",
         )
         scored = (
-            listed.join(maint_small_side(probes), "cell")
+            listed.join(F.broadcast(probes), "cell")
             .filter(F.col("vec_id") != F.col("query_id"))
             .dropDuplicates(["query_id", "vec_id"])
             .select(
@@ -286,13 +277,11 @@ class IvfIndex:
         w = W.partitionBy("query_id").orderBy(
             F.col("cos_sim").desc(), F.col("vec_id")
         )
-        out = (
+        return (
             scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
             .select("query_id", "vec_id", "cos_sim", "rnk")
         )
-        # materialize inside the scope (see search docstring)
-        return out.localCheckpoint()
 
 
 _PQ_QSCALE = 1024  # fixed-point scale for normalized-domain PQ codes
@@ -563,20 +552,13 @@ class IvfPqIndex(IvfIndex):
         optionally keep the ADC-top-``rerank`` per query, then read
         only the survivors' cells from the full-vector table for the
         exact cosine top-k. ``last_probe`` records the span pruning
-        both reads achieved. Scoped + checkpointed like
-        :meth:`IvfIndex.search` (same job-count rationale)."""
-        with maintenance_scope(
-            self.spark, maintenance_n(None, self._codes, self._listed)
-        ):
-            return self._search_pq_inner(queries, k, nprobe, rerank)
+        both reads achieved.
 
-    def _search_pq_inner(
-        self,
-        queries: list[tuple[int, list[float]]],
-        k: int,
-        nprobe: int,
-        rerank: int | None,
-    ) -> DataFrame:
+        Only the bounded survivor-cell collect runs under a derived
+        maintenance scope sized from the index's table bytes (a big
+        index leaves the session untouched: shrink-only). The returned
+        lazy plan is built outside it with a broadcast probe frame, so
+        a shrunken scope's shuffle-hash hint never leaks into it."""
         qscale, books = self._load_pq()
         cents = self.centroids()
         qmat = np.array([v for _, v in queries], dtype=np.float64)
@@ -628,28 +610,40 @@ class IvfPqIndex(IvfIndex):
             adc = adc + F.element_at(
                 "lut", sub_code + F.lit(mi * self.ksub + 1)
             )
-        cand = (
-            codes.join(maint_small_side(probes), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .dropDuplicates(["query_id", "vec_id"])
-            .select("query_id", "qe", "vec_id", "cell", adc.alias("adc"))
-        )
-        if rerank is not None:
-            wa = W.partitionBy("query_id").orderBy("adc", "vec_id")
+
+        def candidates(probe_side: DataFrame) -> DataFrame:
             cand = (
-                cand.withColumn("arnk", F.row_number().over(wa))
-                .filter(F.col("arnk") <= rerank)
-                .drop("arnk")
+                codes.join(probe_side, "cell")
+                .filter(F.col("vec_id") != F.col("query_id"))
+                .dropDuplicates(["query_id", "vec_id"])
+                .select("query_id", "qe", "vec_id", "cell", adc.alias("adc"))
             )
+            if rerank is not None:
+                wa = W.partitionBy("query_id").orderBy("adc", "vec_id")
+                cand = (
+                    cand.withColumn("arnk", F.row_number().over(wa))
+                    .filter(F.col("arnk") <= rerank)
+                    .drop("arnk")
+                )
+            return cand
+
         # bounded collect (<= n_cells ints): which cells hold the
         # survivors — the full-vector read is span-pruned to those
-        rr_cells = sorted(
-            r[0] for r in cand.select("cell").distinct().collect()
-        )
+        with maintenance_scope(
+            self.spark, maintenance_n(None, self._codes, self._listed)
+        ):
+            rr_cells = sorted(
+                r[0]
+                for r in candidates(maint_small_side(probes))
+                .select("cell")
+                .distinct()
+                .collect()
+            )
         self.last_probe["vector_spans_read"] = len(rr_cells)
         self.last_probe["vector_spans_total"] = len(self._listed.spans())
         if not rr_cells:
             return empty
+        cand = candidates(F.broadcast(probes))
         vecs = self._listed.read(self.spark, spans=rr_cells)
         scored = cand.join(
             vecs.select("vec_id", "embedding"), "vec_id"
@@ -663,9 +657,8 @@ class IvfPqIndex(IvfIndex):
         w = W.partitionBy("query_id").orderBy(
             F.col("cos_sim").desc(), F.col("vec_id")
         )
-        out = (
+        return (
             scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
             .select("query_id", "vec_id", "cos_sim", "rnk")
         )
-        return out.localCheckpoint()

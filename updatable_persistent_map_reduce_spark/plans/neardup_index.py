@@ -320,32 +320,28 @@ class NearDupIndex:
     def probe(self, batch: DataFrame) -> DataFrame:
         """Near-dup pairs (doc_a = batch, doc_b = corpus, jaccard_bp)
         at exact integer Jaccard >= 1/2, reading ONLY the batch's band
-        signatures' spans plus the candidates' shingle spans.
+        signatures' spans plus the candidates' shingle spans. The
+        returned plan holds fixed file lists (ManifestTable.read), so
+        concurrent appends never shift what a probe sees.
 
-        The whole probe — span discovery AND the verify join — runs
-        under a derived maintenance scope sized from the batch width +
-        the index's table bytes, and the (bounded: near-dup pairs of
-        one batch) result materializes INSIDE it via localCheckpoint:
-        unscoped, the two discovery collects and the caller's collect
-        each fanned into 3-6 AQE stage-materialization jobs for a
-        bounded probe (20 jobs/probe measured in q_takedown_cascade —
-        guide §1.2). A big batch over a big index leaves the session
-        untouched (maintenance_n is shrink-only), which is the 100 TB
-        path. The returned data is identical either way; it is now a
-        materialized snapshot rather than a lazy plan."""
-        with maintenance_scope(self.spark, self._maint_n(batch)):
-            return self._probe_inner(batch)
-
-    def _probe_inner(self, batch: DataFrame) -> DataFrame:
+        The two bounded span-discovery collects (the batch's band
+        spans, the candidates' shingle spans) run under a derived
+        maintenance scope sized from the batch width + the index's
+        table bytes; a big batch over a big index leaves the session
+        untouched (maintenance_n is shrink-only), the 100 TB path. The
+        returned lazy plan is built outside the scope and runs under
+        the session's full AQE configuration."""
         sigs = self._sig_frame(batch).persist()
         bands_b = self._band_rows(sigs).persist()
         empty = self.spark.createDataFrame(
             [], "doc_a long, doc_b long, jaccard_bp long"
         )
+        n = self._maint_n(batch)
         try:
-            probe_spans = sorted(
-                r[0] for r in bands_b.select("bspan").distinct().collect()
-            )
+            with maintenance_scope(self.spark, n):
+                probe_spans = sorted(
+                    r[0] for r in bands_b.select("bspan").distinct().collect()
+                )
             n_total = len(self._bands.spans())
             self.last_probe = {
                 "band_spans_read": len(probe_spans),
@@ -378,12 +374,13 @@ class NearDupIndex:
                 .select("doc_a", "doc_b")
                 .dropDuplicates(["doc_a", "doc_b"])
             )
-            cand_dspans = sorted(
-                r[0]
-                for r in cand.select(self._dspan(F.col("doc_b")))
-                .distinct()
-                .collect()
-            )
+            with maintenance_scope(self.spark, n):
+                cand_dspans = sorted(
+                    r[0]
+                    for r in cand.select(self._dspan(F.col("doc_b")))
+                    .distinct()
+                    .collect()
+                )
             self.last_probe["shingle_spans_read"] = len(cand_dspans)
             self.last_probe["shingle_spans_total"] = len(self._sh.spans())
             if not cand_dspans:
@@ -417,15 +414,18 @@ class NearDupIndex:
                     .alias("uni"),
                 )
             )
-            out = scored.filter(2 * F.col("inter") >= F.col("uni")).select(
+            return scored.filter(2 * F.col("inter") >= F.col("uni")).select(
                 "doc_a",
                 "doc_b",
                 F.expr("inter * 10000L DIV uni").alias("jaccard_bp"),
             )
-            # Materialize inside the scope (see probe docstring): one
-            # right-sized job instead of an at-conf AQE cascade at the
-            # caller's collect, and the signature pass never re-runs.
-            return out.localCheckpoint()
         finally:
+            # The persist covered probe's own driver-side span
+            # discovery (two distinct-collects over the batch
+            # signatures). Unpersisting does NOT invalidate the
+            # returned lazy plan — executing it recomputes the
+            # batch-sized signature pass once, which beats pinning
+            # executor memory per probe or collecting the result
+            # through the driver.
             bands_b.unpersist()
             sigs.unpersist()

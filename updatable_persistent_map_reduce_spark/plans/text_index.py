@@ -60,13 +60,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_expr
 from .store import ManifestTable
-from .view import (
-    _plan_width,
-    maint_small_side,
-    maintained,
-    maintenance_n,
-    maintenance_scope,
-)
+from .view import _plan_width, maint_small_side, maintained, maintenance_n
 
 K1 = 1.2
 B = 0.75
@@ -487,16 +481,19 @@ class InvertedIndex:
 
     # ----- serve -----------------------------------------------------------
 
-    def _live_filter(self, post: DataFrame) -> DataFrame:
+    def _live_filter(
+        self, post: DataFrame, small_side=maint_small_side
+    ) -> DataFrame:
         """Drop superseded generations: left-join against the (small)
-        replaced set; a row survives iff its doc was never replaced or
-        it carries the doc's live generation."""
+        replaced set, hinted by ``small_side``; a row survives iff its
+        doc was never replaced or it carries the doc's live
+        generation."""
         tomb = self._repl.read(self.spark)
         if tomb is None:
             return post
         tomb = tomb.select("doc_id", "live_gen")
         return (
-            post.join(maint_small_side(tomb), "doc_id", "left")
+            post.join(small_side(tomb), "doc_id", "left")
             .filter(
                 F.col("live_gen").isNull()
                 | (F.col("gen") == F.col("live_gen"))
@@ -521,19 +518,11 @@ class InvertedIndex:
         probed postings after the latest-wins filter, (n_docs, avgdl)
         from the maintained stats.
 
-        Runs under a derived maintenance scope sized from the index's
-        table bytes and materializes the (bounded: top-k) result
-        inside it — unscoped, the term-span collect and the caller's
-        collect each fanned into 2-4 AQE stage jobs per query; a big
-        index leaves the session untouched (shrink-only). Identical
-        rows either way."""
-        with maintenance_scope(
-            self.spark,
-            maintenance_n(None, self._post, self._docs, self._repl),
-        ):
-            return self._bm25_inner(terms, k)
-
-    def _bm25_inner(self, terms: list[str], k: int) -> DataFrame:
+        Returns the lazy serving plan — manifest-pruned postings scan,
+        broadcast df, top-k — under the session's full AQE
+        configuration. No maintenance scope is involved: the only
+        internal collect (the term spans) is a projection over the
+        query terms with no shuffle, one job at any partition count."""
         s = self.stats()
         n_docs = int(s["n_docs"])
         spans = self._term_spans(terms)
@@ -546,9 +535,11 @@ class InvertedIndex:
                 [], "doc_id long, score double"
             )
         avgdl = float(s["total_dl"]) / n_docs
-        tf = self._live_filter(post).filter(F.col("token").isin(terms))
+        tf = self._live_filter(post, F.broadcast).filter(
+            F.col("token").isin(terms)
+        )
         dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        scored = tf.join(maint_small_side(dfreq), "token").select(
+        scored = tf.join(F.broadcast(dfreq), "token").select(
             "doc_id",
             "token",
             (
@@ -593,5 +584,4 @@ class InvertedIndex:
         ranked = p.select(
             "doc_id", F.round(total, 4).alias("score")
         ).orderBy(F.desc("score"), "doc_id")
-        # materialize inside the scope (see bm25 docstring)
-        return ranked.limit(k).localCheckpoint()
+        return ranked.limit(k)

@@ -678,6 +678,36 @@ def test_inverted_index_empty_returns_empty_not_div0(spark, tmp_path):
     assert out == []
 
 
+def test_term_spans_match_the_postings_span_expression(spark, tmp_path):
+    """bm25 hashes its query terms to postings spans on the driver; each
+    term's span must equal the Spark expression the postings are
+    written with (pmod(xxhash64(token), n_spans)) — non-ASCII and empty
+    terms included — and computing them launches no Spark job."""
+    from pyspark.sql import functions as F
+
+    from updatable_persistent_map_reduce_spark.plans.text_index import (
+        InvertedIndex,
+    )
+
+    terms = ["join", "window", "hash", "café", "日本語", "", "naïve-term"]
+    idx = InvertedIndex(spark, str(tmp_path / "inv"), n_spans=32)
+    want = {
+        r.token: r.span
+        for r in spark.createDataFrame([(t,) for t in terms], "token string")
+        .select(
+            "token",
+            F.pmod(F.xxhash64("token"), F.lit(32)).cast("int").alias("span"),
+        )
+        .collect()
+    }
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    got = {t: idx._term_spans([t]) for t in terms}
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == before
+    assert got == {t: [want[t]] for t in terms}
+    assert idx._term_spans(terms) == sorted(set(want.values()))
+
+
 def test_inverted_index_upsert_and_pruned_scan(spark, tmp_path):
     """Persisted inverted-index lifecycle: build, score, incrementally
     append a new document, score again — and verify the query scan is

@@ -1,17 +1,16 @@
-"""Maintenance job sizing: the conf-scope protocol of plans/view.py.
+"""Maintenance job sizing: the per-phase sizes plans/view.py asks
+:func:`maintenance_session` for.
 
-The hazards these tests pin down (both were live review findings):
-- a LARGE batch following a small one must not inherit the small
-  batch's partition count for its heavy phase (survivor rewrite,
-  re-aggregation, writes);
-- an explicit ``maintenance_shuffle_partitions`` must win over every
-  derived size, raising as well as lowering.
+The hazard this pins down (a live review finding): a LARGE batch
+following a small one must not inherit the small batch's partition
+count for its heavy phase (survivor rewrite, re-aggregation, writes).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from updatable_persistent_map_reduce_spark.plans import view as view_mod
 from updatable_persistent_map_reduce_spark.plans.view import MapReduceView
 
 
@@ -35,20 +34,21 @@ def _batch(spark, n, start=0):
     )
 
 
-def _record_scopes(view):
-    """Wrap the view's _conf_scope to record every (n, pin) request."""
-    calls: list[tuple[int | None, bool]] = []
-    orig = view._conf_scope
+def _record_sizes(monkeypatch):
+    """Wrap the view module's maintenance_session to record every
+    requested phase size."""
+    calls: list[int | None] = []
+    orig = view_mod.maintenance_session
 
-    def spy(n, pin=False):
-        calls.append((n, pin))
-        return orig(n, pin=pin)
+    def spy(spark, n):
+        calls.append(n)
+        return orig(spark, n)
 
-    view._conf_scope = spy
+    monkeypatch.setattr(view_mod, "maintenance_session", spy)
     return calls
 
 
-def test_large_after_small_resizes_heavy_phase(spark, tmp_path):
+def test_large_after_small_resizes_heavy_phase(spark, tmp_path, monkeypatch):
     view = _mk_view(spark, tmp_path / "s1")
     # Shrink the sizing unit so a modest batch derives a partition
     # count ABOVE the _MIN_PARTITIONS floor — otherwise both the stale
@@ -56,39 +56,16 @@ def test_large_after_small_resizes_heavy_phase(spark, tmp_path):
     # assertion cannot tell them apart.
     view._ROWS_PER_PARTITION = 1_000
     view.execute(_batch(spark, 100))  # small bootstrap -> meta hint small
-    calls = _record_scopes(view)
+    calls = _record_sizes(monkeypatch)
     big = 20_000
     view.execute(_batch(spark, big, start=1000))
     # The heavy phase must have been sized from THIS batch (20
     # partitions' worth), not the 100-row hint (floor = 8).
     want = view._size_partitions(big)
     assert want > view._MIN_PARTITIONS  # the test's own guard
-    heavy_requests = [n for n, pin in calls if not pin and n is not None]
-    assert heavy_requests, "no derived conf scopes recorded"
+    heavy_requests = [n for n in calls if n is not None]
+    assert heavy_requests, "no derived phase sizes recorded"
     assert max(heavy_requests) >= want, heavy_requests
     # and the result is still right (id ranges disjoint -> pure insert)
     total = view.final_df().agg(F.sum("cnt")).collect()[0][0]
     assert total == 100 + big
-
-
-def test_explicit_partitions_pin_all_phases(spark, tmp_path):
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    explicit = default * 2  # raising, the case derived sizing never does
-    view = _mk_view(
-        spark, tmp_path / "s2", maintenance_shuffle_partitions=explicit
-    )
-    seen: list[str] = []
-    orig_apply = view._apply_inner
-
-    def probe_conf(ids, mapped, cache, src_width=None):
-        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
-        return orig_apply(ids, mapped, cache, src_width)
-
-    view._apply_inner = probe_conf
-    view.execute(_batch(spark, 50))
-    view.execute(_batch(spark, 50, start=25))
-    assert seen == [str(explicit)] * 2, seen
-    # session conf restored afterwards
-    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
-    total = view.final_df().agg(F.sum("cnt")).collect()[0][0]
-    assert total == 75  # 50 + 50 with 25 overlapping ids replaced

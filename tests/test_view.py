@@ -15,6 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from updatable_persistent_map_reduce_spark.plans import MapReduceView
+from updatable_persistent_map_reduce_spark.plans.view import (
+    maintenance_session,
+    on_session,
+)
 
 
 def people_view(spark, tmp_path, **kw):
@@ -553,39 +557,36 @@ def test_auto_two_level_detection(spark, tmp_path):
         )
 
 
-def test_conf_scope_concurrent_restore(spark, tmp_path):
-    """Two views maintained concurrently on ONE session must never
-    interleave conf set/restore and leave the maintenance shuffle
-    sizing pinned (round-2 advisory: the active flag was per-view)."""
+def test_concurrent_maintenance_never_changes_caller_conf(spark):
+    """Threads asking for the same right-sized maintenance session at
+    once share ONE cached child session that carries the maintenance
+    conf, and the caller's session conf never changes meanwhile, so
+    concurrent views cannot leave a maintenance value behind on it."""
     import threading
-    import time as _time
 
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    views = [
-        people_view(spark, tmp_path / f"cs{i}") for i in range(2)
-    ]
-    errors = []
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
+    got, errors = [], []
 
-    def work(v):
+    def work():
         try:
             for _ in range(3):
-                with v._conf_scope(2):
-                    assert (
-                        spark.conf.get("spark.sql.shuffle.partitions") == "2"
-                    )
-                    _time.sleep(0.01)
+                ms = maintenance_session(spark, 2)
+                assert ms.conf.get(key) == "2"
+                assert spark.conf.get(key) == default
+                got.append(ms)
         except BaseException as e:  # noqa: BLE001
             errors.append(e)
 
-    threads = [
-        threading.Thread(target=work, args=(v,)) for v in views for _ in (0, 1)
-    ]
+    threads = [threading.Thread(target=work) for _ in range(4)]
     for t in threads:
         t.start()
     for t in threads:
         t.join()
-    assert not errors
-    assert spark.conf.get("spark.sql.shuffle.partitions") == default
+    assert not errors, errors
+    assert len({id(s) for s in got}) == 1  # one child per (session, n)
+    assert got[0] is not spark
+    assert spark.conf.get(key) == default
 
 
 def test_time_travel_final_df(spark, scenario_view):
@@ -611,30 +612,37 @@ def test_time_travel_final_df(spark, scenario_view):
         v.final_df(version=99_999).collect()
 
 
-def test_new_session_isolated_from_maintenance_conf(spark, tmp_path):
-    """Analytics issued DURING a maintenance window should run on
-    ``spark.newSession()`` (same cluster, isolated conf): while a view
-    holds a pinned maintenance conf scope, the parent session sees the
-    maintenance shuffle-partition count but a child session keeps the
-    default — the documented concurrent-analytics pattern
-    (plans/view.py:_conf_scope)."""
+def test_caller_conf_unchanged_while_maintenance_runs(spark, tmp_path):
+    """A maintenance phase runs on a child session (same cluster and
+    cache, isolated SQL conf), so analytics on the caller's session
+    keep the caller's conf while a view maintains: the child executes
+    with its own partition count, a maintained batch leaves the
+    caller's conf as it was, and serving frames stay on the caller's
+    session (plans/view.py:maintenance_session)."""
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
+    ms = maintenance_session(spark, 2)
+    assert ms is not spark and ms.conf.get(key) == "2"
+    assert ms.conf.get("spark.sql.adaptive.enabled") == "false"
+    q = spark.range(10).groupBy((F.col("id") % 3).alias("g")).count()
+    # the same plan executes with the child's conf once bound to it
+    assert on_session(q, ms).rdd.getNumPartitions() == 2
+    assert spark.conf.get(key) == default
     v = people_view(spark, tmp_path)
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    with v._conf_scope(2, pin=True):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-        child = spark.newSession()
-        assert child.conf.get("spark.sql.shuffle.partitions") == default
-        # and the child actually executes with its own conf
-        n = child.range(10).groupBy((F.col("id") % 3).alias("g")).count()
-        assert n.rdd.getNumPartitions() != 2 or default == "2"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == default
+    v.execute(people_df(spark, [("a", "CA"), ("b", "TX")]))
+    assert counts(v) == {"CA": 1, "TX": 1}
+    assert spark.conf.get(key) == default
+    assert v.final_df().sparkSession is spark
+    # sizes at or above the default keep the caller's own session
+    assert maintenance_session(spark, int(default)) is spark
+    assert maintenance_session(spark, None) is spark
 
 
 def test_two_views_maintained_concurrently(spark, tmp_path):
     """Two views on ONE SparkSession, maintained from concurrent
-    threads: the module-level conf-scope lock serializes their
-    right-sized maintenance windows, both stores end correct, and the
-    session conf is restored to the default afterwards."""
+    threads: their right-sized phases run on child sessions, both
+    stores end correct, and the session conf is still the default
+    afterwards."""
     import threading
 
     default = spark.conf.get("spark.sql.shuffle.partitions")

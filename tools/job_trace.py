@@ -4,7 +4,6 @@ them deterministically instead of re-litigating wall-clock noise).
 
 Usage:
     python tools/job_trace.py q_upsert_recount q_store_compaction ...
-    python tools/job_trace.py --all-store   # the store/lifecycle set
 
 Prints one line per query: name, jobs, wall seconds, rows. Job count
 is measured by diffing the session-global job-id high-water mark via
@@ -35,7 +34,10 @@ def _max_job_id(sc) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
+    names = sys.argv[1:]
+    flags = [a for a in names if a.startswith("--")]
+    if flags:
+        sys.exit(f"unknown option(s) {flags}: pass query names only")
     spark = get_spark("upmr-jobtrace")
     sc = spark.sparkContext
     # Warm: JVM codegen, parquet stack, Arrow workers (mirrors bench.py)

@@ -126,6 +126,11 @@ _CHANGED = [
     "q_dedup_semantic",
     "q_dedup_embed",
     "q_dedup_cluster",
+    # maintenance phases run on child sessions instead of mutating the
+    # caller's conf; bm25 hashes its term spans on the driver
+    "q_sim_index_persisted",
+    "q_sim_index_pq",
+    "q_text_index_persisted",
 ]
 
 # Rows-only by design (oracle=None is intrinsic: sketches/ANN recall

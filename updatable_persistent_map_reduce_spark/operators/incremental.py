@@ -18,24 +18,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import MapReduceView
-from ..plans.view import maintenance_scope
+from ..plans.view import maintenance_session, on_session
 from ..plans.store import ManifestTable
 from ..sources import Catalog
 from . import register
 
 
 def _store_scoped(*tables: str):
-    """Decorator for the store-lifecycle attestation operators: run
+    """Decorator for the store-lifecycle attestation operators: hand
     the operator's BUILD phase (temp-store writes, merges, compacts —
-    chains of small jobs) under a maintenance scope sized from the
+    chains of small jobs) the maintenance session sized from the
     operator's ACTUAL source tables' parquet bytes (driver-side; ~4x
     decompression allowance; max over the tables — r12 advice: sizing
     orders-based operators from customer pinned a larger build to a
-    small scope). Bench-scale scenarios stop paying full-width AQE
-    stage cascades per action; a large source keeps the session conf
-    (maintenance_scope shrinks only). The RETURNED DataFrame is
-    evaluated by the caller outside the scope, so serving reads keep
-    the session's full configuration."""
+    small session). Bench-scale scenarios stop paying full-width AQE
+    stage cascades per action; a large source keeps the caller's
+    session (maintenance_session shrinks only). The RETURNED DataFrame
+    is rebound to the caller's session, so serving reads keep its full
+    configuration; the caller's session conf is never changed."""
     import functools
     import math
 
@@ -52,8 +52,8 @@ def _store_scoped(*tables: str):
                 n = max(8, math.ceil(sz * 4 / (64 * 1024 * 1024)))
             except OSError:
                 n = None
-            with maintenance_scope(spark, n):
-                return fn(spark, sf_dir)
+            ms = maintenance_session(spark, n)
+            return on_session(fn(ms, sf_dir), spark)
 
         return wrapper
 

@@ -43,13 +43,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_expr
 from .store import ManifestTable
-from .view import (
-    _plan_width,
-    maint_small_side,
-    maintained,
-    maintenance_n,
-    maintenance_scope,
-)
+from .view import index_session, maint_small_side, maintained, on_session
 
 
 class IvfIndex:
@@ -63,25 +57,16 @@ class IvfIndex:
 
     # ----- build / maintain ------------------------------------------------
 
-    def _maint_n(self, batch: DataFrame | None = None) -> int:
-        """Partition sizing for @maintained entry points: batch scan
-        width + this index's table bytes (driver-side metadata).
-        IvfPqIndex inherits and adds its codes table."""
-        tables = [self._listed] + (
-            [self._codes] if hasattr(self, "_codes") else []
-        )
-        return maintenance_n(
-            _plan_width(batch) if batch is not None else None, *tables
-        )
-
     @maintained
-    def build(self, e: DataFrame, kmeans_iters: int = 2) -> None:
+    def build(
+        self, spark: SparkSession, e: DataFrame, kmeans_iters: int = 2
+    ) -> None:
         """Fit centroids on ``e`` (vec_id, embedding) and write the
         cell-listed table in one job; atomic manifest publish."""
         from ..operators.similarity import fit_kmeans, make_assign_udf
 
         centroids = fit_kmeans(
-            self.spark, e, n_cells=self.n_cells, iters=kmeans_iters
+            spark, e, n_cells=self.n_cells, iters=kmeans_iters
         )
         os.makedirs(self.path, exist_ok=True)
         with open(self._centroid_path, "w") as f:
@@ -90,13 +75,13 @@ class IvfIndex:
         listed = e.select(
             "vec_id",
             "embedding",
-            make_assign_udf(self.spark, centroids)("embedding").alias("cell"),
+            make_assign_udf(spark, centroids)("embedding").alias("cell"),
         )
         mapping = self._listed.write_data(listed)
         self._listed.commit(replace_all=mapping)
 
     @maintained
-    def upsert(self, new_vectors: DataFrame) -> None:
+    def upsert(self, spark: SparkSession, new_vectors: DataFrame) -> None:
         """Assign new (vec_id, embedding) rows to their nearest
         existing cells and APPEND — an incremental index update with
         the store's normal crash-safe snapshot swap. (Latest-wins
@@ -107,7 +92,7 @@ class IvfIndex:
         assigned = new_vectors.select(
             "vec_id",
             "embedding",
-            make_assign_udf(self.spark, self.centroids())("embedding").alias(
+            make_assign_udf(spark, self.centroids())("embedding").alias(
                 "cell"
             ),
         )
@@ -120,11 +105,11 @@ class IvfIndex:
         # materialized so the key-global read anti-join cannot hide
         # the new live row
         self._listed.append_materializing(
-            self.spark, mapping, keys=assigned.select("vec_id")
+            spark, mapping, keys=assigned.select("vec_id")
         )
 
     @maintained
-    def delete(self, vectors: DataFrame) -> None:
+    def delete(self, spark: SparkSession, vectors: DataFrame) -> None:
         """MERGE-ON-READ delete of vectors from the index — the store's
         tombstone pattern (q_store_delete_vectors, incremental.py)
         applied to vector ids: record (cell, vec_id) TOMBSTONE files
@@ -143,7 +128,7 @@ class IvfIndex:
         from ..operators.similarity import make_assign_udf
 
         keys = vectors.select(
-            make_assign_udf(self.spark, self.centroids())(
+            make_assign_udf(spark, self.centroids())(
                 "embedding"
             ).alias("cell"),
             "vec_id",
@@ -151,10 +136,10 @@ class IvfIndex:
         self._listed.delete_keys(keys, on=["vec_id"])
 
     @maintained
-    def compact(self, min_files: int = 1) -> dict:
+    def compact(self, spark: SparkSession, min_files: int = 1) -> dict:
         """Materialize tombstones / fold small files in the listed
         tier — the store's normal maintenance, exposed on the index."""
-        return self._listed.compact(self.spark, min_files=min_files)
+        return self._listed.compact(spark, min_files=min_files)
 
     def vacuum(self, keep_versions: int = 0) -> int:
         """Reclaim unreferenced files and bound the manifest archive —
@@ -240,7 +225,7 @@ class IvfIndex:
         Returns the lazy serving plan (broadcast probe frame, cell
         equi-join, per-query top-k window): its scan is the probed
         cells' manifest-resolved files, so ``inputFiles()`` attests the
-        pruning. There is no internal collect, so no maintenance scope
+        pruning. There is no internal collect, so no maintenance session
         is involved and the plan runs under the session's full AQE
         configuration."""
         cents = self.centroids()
@@ -353,7 +338,9 @@ class IvfPqIndex(IvfIndex):
     # ----- build -----------------------------------------------------------
 
     @maintained
-    def build(self, e: DataFrame, kmeans_iters: int = 2) -> None:
+    def build(
+        self, spark: SparkSession, e: DataFrame, kmeans_iters: int = 2
+    ) -> None:
         """Coarse build (centroids + full-vector cells) plus the PQ
         payload: fit the global scale and codebooks, encode every
         vector in-plan (pure codegen, one scan), land the codes table
@@ -420,10 +407,10 @@ class IvfPqIndex(IvfIndex):
         self._pq = (_PQ_QSCALE, books)
 
         self._codes.commit(
-            replace_all=self._codes.write_data(self._encode_plan(e))
+            replace_all=self._codes.write_data(self._encode_plan(spark, e))
         )
 
-    def _encode_plan(self, e: DataFrame) -> DataFrame:
+    def _encode_plan(self, spark: SparkSession, e: DataFrame) -> DataFrame:
         """(vec_id, cell, pq_code) for ``e`` under the STORED codebooks
         and coarse centroids — pure codegen encode + one Arrow assign;
         shared by build() and upsert()."""
@@ -475,14 +462,14 @@ class IvfPqIndex(IvfIndex):
             ).cast("long")
         return codes.select(
             "vec_id",
-            make_assign_udf(self.spark, self.centroids())("embedding").alias(
+            make_assign_udf(spark, self.centroids())("embedding").alias(
                 "cell"
             ),
             pq_code.alias("pq_code"),
         )
 
     @maintained
-    def upsert(self, new_vectors: DataFrame) -> None:
+    def upsert(self, spark: SparkSession, new_vectors: DataFrame) -> None:
         """Incremental append to BOTH tiers — the inherited listed-only
         append would leave the new vectors invisible to ADC probes
         (candidates come from the codes table). Order: full vectors
@@ -494,13 +481,13 @@ class IvfPqIndex(IvfIndex):
         as centroid drift."""
         super().upsert(new_vectors)
         self._codes.append_materializing(
-            self.spark,
-            self._codes.write_data(self._encode_plan(new_vectors)),
+            spark,
+            self._codes.write_data(self._encode_plan(spark, new_vectors)),
             keys=new_vectors.select("vec_id"),
         )
 
     @maintained
-    def delete(self, vectors: DataFrame) -> None:
+    def delete(self, spark: SparkSession, vectors: DataFrame) -> None:
         """Tombstone the vec_ids in BOTH tiers. Codes first: ADC
         candidates come from the codes table, so a crash between the
         two commits leaves the vector UNDISCOVERABLE-but-still-stored
@@ -510,7 +497,7 @@ class IvfPqIndex(IvfIndex):
         from ..operators.similarity import make_assign_udf
 
         keys = vectors.select(
-            make_assign_udf(self.spark, self.centroids())(
+            make_assign_udf(spark, self.centroids())(
                 "embedding"
             ).alias("cell"),
             "vec_id",
@@ -519,10 +506,10 @@ class IvfPqIndex(IvfIndex):
         self._listed.delete_keys(keys, on=["vec_id"])
 
     @maintained
-    def compact(self, min_files: int = 1) -> dict:
+    def compact(self, spark: SparkSession, min_files: int = 1) -> dict:
         """Materialize tombstones in both tiers (codes then listed)."""
-        codes = self._codes.compact(self.spark, min_files=min_files)
-        listed = self._listed.compact(self.spark, min_files=min_files)
+        codes = self._codes.compact(spark, min_files=min_files)
+        listed = self._listed.compact(spark, min_files=min_files)
         return {"codes": codes, "listed": listed}
 
     def vacuum(self, keep_versions: int = 0) -> int:
@@ -554,11 +541,11 @@ class IvfPqIndex(IvfIndex):
         exact cosine top-k. ``last_probe`` records the span pruning
         both reads achieved.
 
-        Only the bounded survivor-cell collect runs under a derived
-        maintenance scope sized from the index's table bytes (a big
-        index leaves the session untouched: shrink-only). The returned
-        lazy plan is built outside it with a broadcast probe frame, so
-        a shrunken scope's shuffle-hash hint never leaks into it."""
+        Only the bounded survivor-cell collect runs on a maintenance
+        session sized from the index's table bytes (a big index keeps
+        the caller's session: shrink-only), with the join hint chosen
+        for that session. The returned lazy plan stays on the caller's
+        session with a broadcast probe frame."""
         qscale, books = self._load_pq()
         cents = self.centroids()
         qmat = np.array([v for _, v in queries], dtype=np.float64)
@@ -629,16 +616,14 @@ class IvfPqIndex(IvfIndex):
 
         # bounded collect (<= n_cells ints): which cells hold the
         # survivors — the full-vector read is span-pruned to those
-        with maintenance_scope(
-            self.spark, maintenance_n(None, self._codes, self._listed)
-        ):
-            rr_cells = sorted(
-                r[0]
-                for r in candidates(maint_small_side(probes))
-                .select("cell")
-                .distinct()
-                .collect()
-            )
+        ms = index_session(self)
+        rr_cells = sorted(
+            r[0]
+            for r in on_session(candidates(maint_small_side(probes, ms)), ms)
+            .select("cell")
+            .distinct()
+            .collect()
+        )
         self.last_probe["vector_spans_read"] = len(rr_cells)
         self.last_probe["vector_spans_total"] = len(self._listed.spans())
         if not rr_cells:

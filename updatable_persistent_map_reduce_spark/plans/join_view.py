@@ -69,7 +69,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .store import ManifestTable
-from .view import maintenance_scope
+from .view import maintenance_session, on_session
 
 
 class JoinView:
@@ -134,10 +134,11 @@ class JoinView:
         """Partition count for a batch's heavy phase (survivor rewrite,
         merge, span re-join/re-aggregate): the dirty spans' on-disk
         bytes across fact+dim tables — driver-side manifest metadata,
-        no job. maintenance_scope only ever SHRINKS below the session
-        default, so a large dirty slice keeps full parallelism + AQE
-        (the 100 TB path); a bench-scale batch stops paying 32-wide
-        AQE stage-materialization jobs per action."""
+        no job. maintenance_session only ever SHRINKS below the
+        session default, so a large dirty slice keeps the caller's
+        session with full parallelism + AQE (the 100 TB path); a
+        bench-scale batch stops paying 32-wide AQE
+        stage-materialization jobs per action."""
         total = 0
         for t in (self._fact_t, self._dim_t):
             mapping = t.spans()
@@ -168,35 +169,27 @@ class JoinView:
         # ONE probe job discovers both span footprints (new join spans
         # AND the ids' index spans): a distinct over (jspan, ispan)
         # pairs is <= n_spans² rows after map-side partials, so it runs
-        # under the fixed probe sizing (AQE off, no stage-job cascade)
+        # on the fixed probe sizing (AQE off, no stage-job cascade)
         # — previously two separate full-width AQE collects.
-        with maintenance_scope(spark, self._PROBE_PARTITIONS):
-            pair_rows = (
-                b.select(
-                    "__jspan",
-                    self._ispan(self.fact_id).alias("__ispan"),
-                )
-                .distinct()
-                .collect()
-            )
+        ps = maintenance_session(spark, self._PROBE_PARTITIONS)
+        pair_rows = (
+            on_session(b, ps)
+            .select("__jspan", self._ispan(self.fact_id).alias("__ispan"))
+            .distinct()
+            .collect()
+        )
         new_spans = {int(r[0]) for r in pair_rows}
         idx_spans = {int(r[1]) for r in pair_rows}
 
-        ids = b.select(F.col(self.fact_id)).withColumn(
-            "__ispan", self._ispan(self.fact_id)
-        )
-        old = None
-        idx = self._idx_t.read(spark, spans=sorted(idx_spans))
+        old_spans = set()
+        idx = self._idx_t.read(ps, spans=sorted(idx_spans))
         if idx is not None:
             old = idx.join(
-                ids.select(self.fact_id), on=self.fact_id, how="left_semi"
+                b.select(self.fact_id), on=self.fact_id, how="left_semi"
             )
-        with maintenance_scope(spark, self._PROBE_PARTITIONS):
-            old_spans = (
-                {int(r[0]) for r in old.select("__jspan").distinct().collect()}
-                if old is not None
-                else set()
-            )
+            old_spans = {
+                int(r[0]) for r in old.select("__jspan").distinct().collect()
+            }
         dirty = sorted(new_spans | old_spans)
         self._journal_begin(dirty)
 
@@ -209,39 +202,40 @@ class JoinView:
         # — the same OCC posture merge/delete_keys already hold; the
         # documented single-writer assumption is a deployment rule,
         # not the safety mechanism.
-        with maintenance_scope(spark, self._heavy_n(dirty)):
-            base_v = self._fact_t.version
-            cur = self._fact_t.read(spark, spans=dirty)
-            out = b
-            if cur is not None:
-                out = cur.join(
-                    b.select(self.fact_id), on=self.fact_id, how="left_anti"
-                ).unionByName(b)
-            mapping = self._fact_t.write_data(out)
-            self._fact_t.commit(
-                replace={s: mapping[s] for s in mapping},
-                drop=[s for s in dirty if s not in mapping],
-                base_version=base_v,
-            )
+        hs = maintenance_session(spark, self._heavy_n(dirty))
+        b = on_session(b, hs)
+        base_v = self._fact_t.version
+        cur = self._fact_t.read(hs, spans=dirty)
+        out = b
+        if cur is not None:
+            out = cur.join(
+                b.select(self.fact_id), on=self.fact_id, how="left_anti"
+            ).unionByName(b)
+        mapping = self._fact_t.write_data(out)
+        self._fact_t.commit(
+            replace={s: mapping[s] for s in mapping},
+            drop=[s for s in dirty if s not in mapping],
+            base_version=base_v,
+        )
 
-            # Index upsert: fact id -> its new join span (merge is
-            # legal: keyed by fact id, __ispan a pure function of it).
-            # __jspan is taken straight off the checkpointed batch row,
-            # never recomputed from the bare id.
-            src = b.select(self.fact_id, "__jspan").withColumn(
-                "__ispan", self._ispan(self.fact_id)
-            )
-            # touched = the probe's idx_spans (exactly src's distinct
-            # __ispan set — same rows, same pure hash) and the stats
-            # are unused: skip merge's two bookkeeping jobs.
-            self._idx_t.merge(
-                src,
-                on=[self.fact_id],
-                touched=sorted(idx_spans),
-                want_counts=False,
-            )
+        # Index upsert: fact id -> its new join span (merge is legal:
+        # keyed by fact id, __ispan a pure function of it). __jspan is
+        # taken straight off the checkpointed batch row, never
+        # recomputed from the bare id.
+        src = b.select(self.fact_id, "__jspan").withColumn(
+            "__ispan", self._ispan(self.fact_id)
+        )
+        # touched = the probe's idx_spans (exactly src's distinct
+        # __ispan set — same rows, same pure hash) and the stats are
+        # unused: skip merge's two bookkeeping jobs.
+        self._idx_t.merge(
+            src,
+            on=[self.fact_id],
+            touched=sorted(idx_spans),
+            want_counts=False,
+        )
 
-            self._recompute_partials(dirty)
+        self._recompute_partials(dirty, hs)
         self._journal_clear()
         return {"dirty_spans": dirty, "migrated_from": sorted(old_spans - new_spans)}
 
@@ -253,18 +247,20 @@ class JoinView:
         retro-propagation a map-side enrichment join cannot do."""
         b = batch.withColumn("__jspan", self._jspan(self.dim_id))
         b = b.localCheckpoint(eager=True)
-        with maintenance_scope(self.spark, self._PROBE_PARTITIONS):
-            dirty = sorted(
-                int(r[0]) for r in b.select("__jspan").distinct().collect()
-            )
+        ps = maintenance_session(self.spark, self._PROBE_PARTITIONS)
+        dirty = sorted(
+            int(r[0])
+            for r in on_session(b, ps).select("__jspan").distinct().collect()
+        )
         self._journal_begin(dirty)
-        with maintenance_scope(self.spark, self._heavy_n(dirty)):
-            # touched = the probe's dirty set (exactly b's distinct
-            # __jspan set); stats unused — skip both bookkeeping jobs.
-            self._dim_t.merge(
-                b, on=[self.dim_id], touched=dirty, want_counts=False
-            )
-            self._recompute_partials(dirty)
+        hs = maintenance_session(self.spark, self._heavy_n(dirty))
+        # touched = the probe's dirty set (exactly b's distinct __jspan
+        # set); stats unused — skip both bookkeeping jobs.
+        self._dim_t.merge(
+            on_session(b, hs), on=[self.dim_id], touched=dirty,
+            want_counts=False,
+        )
+        self._recompute_partials(dirty, hs)
         self._journal_clear()
         return {"dirty_spans": dirty}
 
@@ -276,42 +272,42 @@ class JoinView:
             "__ispan", self._ispan(self.fact_id)
         )
         ids = ids.localCheckpoint(eager=True)
-        with maintenance_scope(spark, self._PROBE_PARTITIONS):
-            idx_spans = {
-                int(r[0]) for r in ids.select("__ispan").distinct().collect()
-            }
-        idx = self._idx_t.read(spark, spans=sorted(idx_spans))
+        ps = maintenance_session(spark, self._PROBE_PARTITIONS)
+        idx_spans = {
+            int(r[0])
+            for r in on_session(ids, ps).select("__ispan").distinct().collect()
+        }
+        idx = self._idx_t.read(ps, spans=sorted(idx_spans))
         if idx is None:
             return {"dirty_spans": []}
         hit = idx.join(ids.select(self.fact_id), on=self.fact_id, how="left_semi")
-        with maintenance_scope(spark, self._PROBE_PARTITIONS):
-            dirty = sorted(
-                int(r[0]) for r in hit.select("__jspan").distinct().collect()
-            )
+        dirty = sorted(
+            int(r[0]) for r in hit.select("__jspan").distinct().collect()
+        )
         if not dirty:
             return {"dirty_spans": []}
         self._journal_begin(dirty)
-        with maintenance_scope(spark, self._heavy_n(dirty)):
-            base_v = self._fact_t.version
-            cur = self._fact_t.read(spark, spans=dirty)
-            if cur is not None:
-                # cur is None only when every dirty span is already
-                # empty — possible when the index holds only stale
-                # (healed-over) entries for rows a torn delete removed;
-                # nothing to rewrite
-                out = cur.join(
-                    ids.select(self.fact_id), on=self.fact_id, how="left_anti"
-                )
-                mapping = self._fact_t.write_data(out)
-                self._fact_t.commit(
-                    replace={s: mapping[s] for s in mapping},
-                    drop=[s for s in dirty if s not in mapping],
-                    base_version=base_v,
-                )
-            self._idx_t.delete_keys(
-                hit.select("__ispan", self.fact_id), on=[self.fact_id]
+        hs = maintenance_session(spark, self._heavy_n(dirty))
+        base_v = self._fact_t.version
+        cur = self._fact_t.read(hs, spans=dirty)
+        if cur is not None:
+            # cur is None only when every dirty span is already empty —
+            # possible when the index holds only stale (healed-over)
+            # entries for rows a torn delete removed; nothing to rewrite
+            out = cur.join(
+                ids.select(self.fact_id), on=self.fact_id, how="left_anti"
             )
-            self._recompute_partials(dirty)
+            mapping = self._fact_t.write_data(out)
+            self._fact_t.commit(
+                replace={s: mapping[s] for s in mapping},
+                drop=[s for s in dirty if s not in mapping],
+                base_version=base_v,
+            )
+        self._idx_t.delete_keys(
+            on_session(hit, hs).select("__ispan", self.fact_id),
+            on=[self.fact_id],
+        )
+        self._recompute_partials(dirty, hs)
         self._journal_clear()
         return {"dirty_spans": dirty}
 
@@ -346,30 +342,30 @@ class JoinView:
             return
         with open(self._journal_path) as f:
             dirty = [int(s) for s in json.load(f)["dirty"]]
-        with maintenance_scope(self.spark, self._heavy_n(dirty)):
-            facts = self._fact_t.read(self.spark, spans=dirty)
-            if facts is not None:
-                src = facts.select(self.fact_id, "__jspan").withColumn(
-                    "__ispan", self._ispan(self.fact_id)
-                )
-                self._idx_t.merge(src, on=[self.fact_id], want_counts=False)
-            self._recompute_partials(dirty)
+        hs = maintenance_session(self.spark, self._heavy_n(dirty))
+        facts = self._fact_t.read(hs, spans=dirty)
+        if facts is not None:
+            src = facts.select(self.fact_id, "__jspan").withColumn(
+                "__ispan", self._ispan(self.fact_id)
+            )
+            self._idx_t.merge(src, on=[self.fact_id], want_counts=False)
+        self._recompute_partials(dirty, hs)
         self._journal_clear()
 
     # ----- maintenance -----------------------------------------------------
 
-    def _recompute_partials(self, spans) -> None:
-        """Join + aggregate over exactly ``spans``; replace those
-        partial spans (drop the ones that emptied). Both reads are
-        manifest-span-pruned, so the equi-join's input — and hence
-        its exchange — is bounded by the dirty spans' bytes; no other
-        span's files are touched."""
+    def _recompute_partials(self, spans, spark: SparkSession) -> None:
+        """Join + aggregate over exactly ``spans`` on the phase session
+        ``spark``; replace those partial spans (drop the ones that
+        emptied). Both reads are manifest-span-pruned, so the
+        equi-join's input — and hence its exchange — is bounded by the
+        dirty spans' bytes; no other span's files are touched."""
         spans = sorted(set(int(s) for s in spans))
         if not spans:
             return
         base_v = self._part_t.version  # OCC pin, same as the fact commit
-        f = self._fact_t.read(self.spark, spans=spans)
-        d = self._dim_t.read(self.spark, spans=spans)
+        f = self._fact_t.read(spark, spans=spans)
+        d = self._dim_t.read(spark, spans=spans)
         mapping: dict[int, list[str]] = {}
         if f is not None and d is not None:
             joined = f.drop("__jspan").join(
@@ -393,8 +389,9 @@ class JoinView:
         """Full maintenance pass: recompute every span present on
         either side (each span's recompute is still span-bounded)."""
         spans = set(self._fact_t.spans()) | set(self._dim_t.spans())
-        with maintenance_scope(self.spark, self._heavy_n(spans)):
-            self._recompute_partials(spans)
+        self._recompute_partials(
+            spans, maintenance_session(self.spark, self._heavy_n(spans))
+        )
 
     # ----- reads -----------------------------------------------------------
 

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .store import ManifestTable
-from .view import _plan_width, maintained, maintenance_n, maintenance_scope
+from .view import index_session, maintained, on_session
 
 
 class NearDupIndex:
@@ -154,16 +154,8 @@ class NearDupIndex:
 
     # ----- build / append ---------------------------------------------------
 
-    def _maint_n(self, batch: DataFrame | None = None) -> int:
-        """Partition sizing for @maintained entry points: batch scan
-        width + this index's table bytes (driver-side metadata)."""
-        return maintenance_n(
-            _plan_width(batch) if batch is not None else None,
-            self._bands, self._sh,
-        )
-
     @maintained
-    def build(self, docs: DataFrame) -> None:
+    def build(self, spark: SparkSession, docs: DataFrame) -> None:
         """Signature ``docs`` (doc_id, text) once; land band postings
         bucketed by (band, sig)-hash span and shingle payloads by
         doc-hash span. Atomic publish per table, shingles first."""
@@ -179,7 +171,7 @@ class NearDupIndex:
             sigs.unpersist()
 
     @maintained
-    def append(self, docs: DataFrame) -> None:
+    def append(self, spark: SparkSession, docs: DataFrame) -> None:
         """Append NEW documents: signatures land under atomic manifest
         snapshots (shingles first — see module docstring for the
         crash ordering argument). Incremental cost is O(batch): the
@@ -193,7 +185,7 @@ class NearDupIndex:
                 .distinct()
                 .collect()
             )
-            existing = self._sh.read(self.spark, spans=batch_dspans)
+            existing = self._sh.read(spark, spans=batch_dspans)
             if existing is not None:
                 hit = (
                     sigs.join(
@@ -225,13 +217,13 @@ class NearDupIndex:
             sh_map = self._sh.write_data(self._shingle_rows(sigs))
             band_map = self._bands.write_data(self._band_rows(sigs))
             ids = sigs.select("doc_id")
-            self._sh.append_materializing(self.spark, sh_map, keys=ids)
-            self._bands.append_materializing(self.spark, band_map, keys=ids)
+            self._sh.append_materializing(spark, sh_map, keys=ids)
+            self._bands.append_materializing(spark, band_map, keys=ids)
         finally:
             sigs.unpersist()
 
     @maintained
-    def delete(self, docs: DataFrame) -> None:
+    def delete(self, spark: SparkSession, docs: DataFrame) -> None:
         """TAKEDOWN: remove documents (doc_id, text) from the band
         index — the ANN index's MoR tombstone pattern (plans/
         ann_index.py delete()) applied to LSH postings. Signatures are
@@ -273,7 +265,7 @@ class NearDupIndex:
             )
             if not dspans:
                 return
-            live = self._sh.read(self.spark, spans=dspans)
+            live = self._sh.read(spark, spans=dspans)
             if live is None:
                 return
             sigs_live = sigs.join(
@@ -298,13 +290,13 @@ class NearDupIndex:
             sigs.unpersist()
 
     @maintained
-    def compact(self, min_files: int = 1) -> dict:
+    def compact(self, spark: SparkSession, min_files: int = 1) -> dict:
         """Materialize pending takedown tombstones / fold small files
         in both tiers — the store's normal maintenance, exposed on the
         index (the ann_index pattern). Returns per-tier stats."""
         return {
-            "shingles": self._sh.compact(self.spark, min_files=min_files),
-            "bands": self._bands.compact(self.spark, min_files=min_files),
+            "shingles": self._sh.compact(spark, min_files=min_files),
+            "bands": self._bands.compact(spark, min_files=min_files),
         }
 
     def vacuum(self, keep_versions: int = 0) -> int:
@@ -325,23 +317,26 @@ class NearDupIndex:
         concurrent appends never shift what a probe sees.
 
         The two bounded span-discovery collects (the batch's band
-        spans, the candidates' shingle spans) run under a derived
-        maintenance scope sized from the batch width + the index's
-        table bytes; a big batch over a big index leaves the session
-        untouched (maintenance_n is shrink-only), the 100 TB path. The
-        returned lazy plan is built outside the scope and runs under
-        the session's full AQE configuration."""
+        spans, the candidates' shingle spans) run on a maintenance
+        session sized from the batch width + the index's table bytes;
+        a big batch over a big index keeps the caller's session
+        (maintenance_session only shrinks), the 100 TB path. The
+        returned lazy plan stays on the caller's session and runs
+        under its full AQE configuration."""
         sigs = self._sig_frame(batch).persist()
         bands_b = self._band_rows(sigs).persist()
         empty = self.spark.createDataFrame(
             [], "doc_a long, doc_b long, jaccard_bp long"
         )
-        n = self._maint_n(batch)
+        ms = index_session(self, batch)
         try:
-            with maintenance_scope(self.spark, n):
-                probe_spans = sorted(
-                    r[0] for r in bands_b.select("bspan").distinct().collect()
-                )
+            probe_spans = sorted(
+                r[0]
+                for r in on_session(bands_b, ms)
+                .select("bspan")
+                .distinct()
+                .collect()
+            )
             n_total = len(self._bands.spans())
             self.last_probe = {
                 "band_spans_read": len(probe_spans),
@@ -374,13 +369,13 @@ class NearDupIndex:
                 .select("doc_a", "doc_b")
                 .dropDuplicates(["doc_a", "doc_b"])
             )
-            with maintenance_scope(self.spark, n):
-                cand_dspans = sorted(
-                    r[0]
-                    for r in cand.select(self._dspan(F.col("doc_b")))
-                    .distinct()
-                    .collect()
-                )
+            cand_dspans = sorted(
+                r[0]
+                for r in on_session(cand, ms)
+                .select(self._dspan(F.col("doc_b")))
+                .distinct()
+                .collect()
+            )
             self.last_probe["shingle_spans_read"] = len(cand_dspans)
             self.last_probe["shingle_spans_total"] = len(self._sh.spans())
             if not cand_dspans:

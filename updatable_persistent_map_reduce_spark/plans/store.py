@@ -241,19 +241,12 @@ class ManifestTable:
         )
         if sort_cols:
             out = out.sortWithinPartitions("__span", *sort_cols)
-        spark = df.sparkSession
-        conf_key = "spark.sql.files.maxRecordsPerFile"
-        prev = spark.conf.get(conf_key, None)
-        try:
-            if max_records_per_file is not None:
-                spark.conf.set(conf_key, str(max_records_per_file))
-            out.write.mode("overwrite").partitionBy("__span").parquet(target)
-        finally:
-            if max_records_per_file is not None:
-                if prev is None:
-                    spark.conf.unset(conf_key)
-                else:
-                    spark.conf.set(conf_key, prev)
+        writer = out.write.mode("overwrite").partitionBy("__span")
+        if max_records_per_file is not None:
+            # a writer option, not session conf: concurrent writes on
+            # the same session never see each other's file bound
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        writer.parquet(target)
         mapping: dict[int, list[str]] = {}
         prefix = "__span="
         for entry in sorted(os.listdir(target)):

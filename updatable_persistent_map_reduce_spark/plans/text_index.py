@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_expr
 from .store import ManifestTable
-from .view import _plan_width, maint_small_side, maintained, maintenance_n
+from .view import maint_small_side, maintained
 
 K1 = 1.2
 B = 0.75
@@ -171,16 +171,13 @@ class InvertedIndex:
             )
         return docs
 
-    def _maint_n(self, batch: DataFrame | None = None) -> int:
-        """Partition sizing for @maintained entry points: batch scan
-        width + this index's table bytes (driver-side metadata)."""
-        return maintenance_n(
-            _plan_width(batch) if batch is not None else None,
-            self._post, self._docs, self._repl,
-        )
-
     @maintained
-    def build(self, docs: DataFrame, seq_col: str | None = None) -> None:
+    def build(
+        self,
+        spark: SparkSession,
+        docs: DataFrame,
+        seq_col: str | None = None,
+    ) -> None:
         """Tokenize ``docs`` (doc_id, text) into term-hash-bucketed
         postings + the doc index; one write job each, atomic publish."""
         gen = self._post.version + 1
@@ -198,7 +195,12 @@ class InvertedIndex:
         self.refresh_stats()
 
     @maintained
-    def upsert(self, new_docs: DataFrame, seq_col: str | None = None) -> None:
+    def upsert(
+        self,
+        spark: SparkSession,
+        new_docs: DataFrame,
+        seq_col: str | None = None,
+    ) -> None:
         """Latest-wins document upsert: brand-new ids append; ids that
         already exist are REPLACED — their old postings stop scoring
         the moment the upsert commits (the reference's defining
@@ -219,7 +221,7 @@ class InvertedIndex:
         )
         # probe: which incoming ids already exist, and their old dl —
         # manifest-pruned to the incoming ids' doc spans only
-        existing = self._docs.read(self.spark, spans=dspans)
+        existing = self._docs.read(spark, spans=dspans)
         old = (
             existing.join(ids, "doc_id", "semi") if existing is not None
             else None
@@ -237,7 +239,7 @@ class InvertedIndex:
         # or drop its vector entirely (RESURRECTING the old postings,
         # which still exist physically until compact()); pinning the
         # new generation keeps exactly the fresh rows live.
-        cur = self._repl.read(self.spark, spans=dspans)
+        cur = self._repl.read(spark, spans=dspans)
         # tombed-id presence costs one bounded limit(1) job and ONLY
         # when a replaced table exists at all — the append-only ingest
         # fast path (fresh index, cur is None) pays nothing beyond the
@@ -323,7 +325,7 @@ class InvertedIndex:
         self._maybe_auto_compact()
 
     @maintained
-    def delete(self, doc_ids: DataFrame) -> None:
+    def delete(self, spark: SparkSession, doc_ids: DataFrame) -> None:
         """TAKEDOWN: remove documents from the serving index — the
         reference's delete-and-reschedule contract (Executer.cs:
         240-261) and the ANN index's MoR tombstone pattern
@@ -356,7 +358,7 @@ class InvertedIndex:
         )
         if not dspans:
             return
-        existing = self._docs.read(self.spark, spans=dspans)
+        existing = self._docs.read(spark, spans=dspans)
         old = (
             existing.join(ids, "doc_id", "semi")
             if existing is not None
@@ -367,7 +369,7 @@ class InvertedIndex:
             [[n_del, old_dl]] = old.agg(
                 F.count(F.lit(1)), F.coalesce(F.sum("dl"), F.lit(0))
             ).collect()
-        cur = self._repl.read(self.spark, spans=dspans)
+        cur = self._repl.read(spark, spans=dspans)
         # sentinel also for ids already tombstoned (idempotent re-run)
         dead_ids = old.select("doc_id") if old is not None else None
         if cur is not None:
@@ -430,17 +432,17 @@ class InvertedIndex:
             self.compact()
 
     @maintained
-    def compact(self) -> None:
+    def compact(self, spark: SparkSession) -> None:
         """Fold the delete vectors into the postings files: one
         distributed filter-rewrite job dropping every dead generation,
         then an empty ``replaced`` table. Run on a cadence (or when
         the replaced set outgrows broadcast size); queries before,
         during, and after see identical results — the rewrite swaps in
         atomically."""
-        post = self._post.read(self.spark)
+        post = self._post.read(spark)
         if post is None:
             return
-        live = self._live_filter(post)
+        live = self._live_filter(post, spark)
         self._post.commit(replace_all=self._post.write_data(live))
         self._repl.commit(replace_all={})
 
@@ -461,13 +463,13 @@ class InvertedIndex:
             return json.load(f)
 
     @maintained
-    def refresh_stats(self) -> dict:
+    def refresh_stats(self, spark: SparkSession) -> dict:
         """Recompute (n_docs, total_dl) exactly from the doc_index —
         one columnar count+sum. The incremental per-upsert update is
         exact in normal operation; a crash between an upsert's table
         commits and its stats write leaves a bounded drift, and this
         squares it away."""
-        idx = self._docs.read(self.spark)
+        idx = self._docs.read(spark)
         if idx is None:
             n, dl = 0, 0  # empty index: no doc_index files at all
         else:
@@ -482,18 +484,19 @@ class InvertedIndex:
     # ----- serve -----------------------------------------------------------
 
     def _live_filter(
-        self, post: DataFrame, small_side=maint_small_side
+        self, post: DataFrame, phase: SparkSession | bool
     ) -> DataFrame:
         """Drop superseded generations: left-join against the (small)
-        replaced set, hinted by ``small_side``; a row survives iff its
+        replaced set, read through ``post``'s session and hinted by
+        :func:`maint_small_side` for ``phase``; a row survives iff its
         doc was never replaced or it carries the doc's live
         generation."""
-        tomb = self._repl.read(self.spark)
+        tomb = self._repl.read(post.sparkSession)
         if tomb is None:
             return post
         tomb = tomb.select("doc_id", "live_gen")
         return (
-            post.join(small_side(tomb), "doc_id", "left")
+            post.join(maint_small_side(tomb, phase), "doc_id", "left")
             .filter(
                 F.col("live_gen").isNull()
                 | (F.col("gen") == F.col("live_gen"))
@@ -502,14 +505,20 @@ class InvertedIndex:
         )
 
     def _term_spans(self, terms: list[str]) -> list[int]:
-        rows = (
-            self.spark.createDataFrame([(t,) for t in terms], "token string")
-            .select(
-                F.pmod(F.xxhash64("token"), F.lit(self.n_spans)).cast("int")
-            )
-            .collect()
+        """The postings spans of ``terms`` — ``pmod(xxhash64(token),
+        n_spans)``, the span expression of :meth:`_postings` — computed
+        on the driver with Spark's own XXH64 (seed 42, the
+        ``xxhash64`` default) over each term's UTF-8 bytes: no Spark
+        job. Python's ``%`` with a positive modulus is ``pmod``."""
+        jvm = self.spark._jvm
+        xxh64 = jvm.org.apache.spark.sql.catalyst.expressions.XXH64
+        utf8 = jvm.org.apache.spark.unsafe.types.UTF8String
+        return sorted(
+            {
+                xxh64.hashUTF8String(utf8.fromString(t), 42) % self.n_spans
+                for t in terms
+            }
         )
-        return sorted({r[0] for r in rows})
 
     def bm25(self, terms: list[str], k: int = 20) -> DataFrame:
         """Okapi BM25 top-k over the probed postings spans only.
@@ -520,9 +529,8 @@ class InvertedIndex:
 
         Returns the lazy serving plan — manifest-pruned postings scan,
         broadcast df, top-k — under the session's full AQE
-        configuration. No maintenance scope is involved: the only
-        internal collect (the term spans) is a projection over the
-        query terms with no shuffle, one job at any partition count."""
+        configuration. Nothing runs before the caller's action: the
+        term spans are hashed on the driver (:meth:`_term_spans`)."""
         s = self.stats()
         n_docs = int(s["n_docs"])
         spans = self._term_spans(terms)
@@ -535,7 +543,7 @@ class InvertedIndex:
                 [], "doc_id long, score double"
             )
         avgdl = float(s["total_dl"]) / n_docs
-        tf = self._live_filter(post, F.broadcast).filter(
+        tf = self._live_filter(post, False).filter(
             F.col("token").isin(terms)
         )
         dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))

@@ -106,6 +106,16 @@ every write job of a batch runs concurrently — there is no
 reader/append ordering to respect (the old directory-swap protocol
 needed a two-phase schedule here).
 
+Maintenance sizing: each phase of a batch (batch cache, footprint
+probe, heavy rewrite) derives a partition count from driver-side
+metadata. Below the caller's shuffle partitions it runs on a child
+session (:func:`maintenance_session`: ``spark.newSession()`` holding
+the caller's conf plus a static small plan, created once per size and
+never changed) by reading through it and rebinding its frames
+(:func:`on_session`); otherwise it runs on the caller's session. The
+caller's conf is never touched, so analytics beside a running batch,
+concurrent views and the serving plans all keep their own settings.
+
 Scale notes (100 TB): raise ``n_key_spans``/``n_doc_spans`` so a span
 ~= a few GB (they are the rewrite and re-aggregation granularity);
 skewed group keys stay healthy because a span holds many keys and AQE
@@ -131,13 +141,13 @@ when the index is small.
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import json
 import math
 import operator
 import os
 import threading
+import weakref
 import zlib
 from collections.abc import Callable, Sequence
 
@@ -150,53 +160,67 @@ from .store import ManifestTable
 _CLOSED_AGG_RE = None  # compiled lazily; see _rereduce_closed
 
 
-def maintenance_n(width: int | None, *tables) -> int:
+def maintenance_n(batch: DataFrame | None, *tables) -> int:
     """Right-size a maintenance phase (guide §2.2: derive partitioning
-    from the data, never a constant): max of the input plan's scan
+    from the data, never a constant): max of the batch plan's scan
     width and the involved ManifestTables' on-disk bytes / 64 MB —
-    all driver-side metadata, no job. Floored at 8; values at or above
-    the session default leave the session untouched (maintenance_scope
-    only ever shrinks), which is the 100 TB path."""
+    all driver-side metadata, no job. Floored at 8; a value at or
+    above the session default keeps the caller's session
+    (:func:`maintenance_session` only ever shrinks), which is the
+    100 TB path."""
     total = 0
     for t in tables:
         try:
             total += t.stats()["bytes"]
         except Exception:  # noqa: BLE001 — missing table: contributes 0
             pass
+    width = _plan_width(batch) if batch is not None else None
     return max(8, width or 0, math.ceil(total / (64 * 1024 * 1024)))
+
+
+def index_session(index, batch: DataFrame | None = None) -> SparkSession:
+    """The maintenance session for one call on a persisted index: sized
+    by ``maintenance_n(batch, *every ManifestTable the index holds)``
+    from the index's own session."""
+    tables = [t for t in vars(index).values() if isinstance(t, ManifestTable)]
+    return maintenance_session(index.spark, maintenance_n(batch, *tables))
 
 
 def maintained(fn):
     """Decorator for index maintenance entry points (build/upsert/
-    delete/compact): runs the method under a maintenance_scope sized
-    by the instance's ``_maint_n(batch)``, where ``batch`` is the
-    first positional DataFrame argument (None for argless
-    maintenance). Nested scopes no-op, so decorated methods freely
-    call each other; serving/query paths stay undecorated and keep
-    the session's full AQE configuration."""
+    delete/compact): the method runs on :func:`index_session` for
+    ``batch``, the first DataFrame argument (None for argless
+    maintenance). Every DataFrame argument is rebound to that session
+    and the session is passed as the method's first argument after
+    ``self``. A nested call (one maintained method calling another)
+    sizes itself the same way; serving/query paths stay undecorated
+    and keep the session's full AQE configuration."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **k):
-        batch = next((x for x in a if isinstance(x, DataFrame)), None)
-        with maintenance_scope(self.spark, self._maint_n(batch)):
-            return fn(self, *a, **k)
+        batch = next(
+            (x for x in (*a, *k.values()) if isinstance(x, DataFrame)), None
+        )
+        spark = index_session(self, batch)
+
+        def bind(x):
+            return on_session(x, spark) if isinstance(x, DataFrame) else x
+
+        a = [bind(x) for x in a]
+        k = {name: bind(x) for name, x in k.items()}
+        return fn(self, spark, *a, **k)
 
     return wrapper
 
 
-def scope_is_small() -> bool:
-    """True while the CURRENT thread is inside a maintenance_scope that
-    shrank the session (AQE off, auto-broadcast off): plan maintenance
-    joins as shuffle-hash there — one job, no broadcast-build dispatch
-    — and as broadcast otherwise (the at-scale strategy)."""
-    return bool(getattr(_CONF_SCOPE_TLS, "small", False))
-
-
-def maint_small_side(df: DataFrame) -> DataFrame:
-    """Hint the bounded side of a maintenance join: broadcast at scale,
-    shuffle-hash inside a shrunken maintenance scope (where the
-    broadcast build's separate job is pure dispatch overhead)."""
-    return df.hint("shuffle_hash") if scope_is_small() else F.broadcast(df)
+def maint_small_side(df: DataFrame, phase: SparkSession | bool) -> DataFrame:
+    """Hint the bounded side of a maintenance join for the session that
+    runs it: broadcast at scale, shuffle-hash on a shrunken maintenance
+    session (``phase`` is that session, or True), where auto-broadcast
+    is off and the broadcast build's separate job is pure dispatch
+    overhead."""
+    small = phase if isinstance(phase, bool) else phase in _CHILD_ROOTS
+    return df.hint("shuffle_hash") if small else F.broadcast(df)
 
 
 def _rereduce_closed(agg_exprs: Sequence[Column] | None) -> bool:
@@ -241,9 +265,6 @@ def _doc_hash(uid_column: Column) -> Column:
 
 MapFn = Callable[[DataFrame], DataFrame]
 
-# spark.conf is session-global: serialize modifying maintenance scopes
-# across all views/threads sharing a session (see _conf_scope). The
-# re-entrancy/nesting guard is per-thread.
 def _plan_width(df: DataFrame) -> int | None:
     """Partition count of ``df``'s plan before any new shuffle —
     driver-side plan inspection, no job. For a batch that is narrow
@@ -253,7 +274,7 @@ def _plan_width(df: DataFrame) -> int | None:
     (createDataFrame — takedown id lists, probe batches) reports
     width 1: its RDD partition count is just defaultParallelism, a
     parallelism artifact that made maintenance_n think a one-row
-    batch was cluster-wide and kept the scope from shrinking (every
+    batch was cluster-wide and kept maintenance from shrinking (every
     small maintenance action then ran 2-5 AQE stage-materialization
     jobs instead of one). Detected from the analyzed plan's leaves
     (LocalRelation / LogicalRDD / OneRowRelation — driver-provided
@@ -272,130 +293,90 @@ def _plan_width(df: DataFrame) -> int | None:
         return None
 
 
-_CONF_SCOPE_LOCK = threading.RLock()
-_CONF_SCOPE_TLS = threading.local()
+# What a shrunken maintenance session changes. Every join side of a
+# right-sized phase is bounded (one batch + its dirty slice), so the
+# partition count is static (AQE's coalescing done up front) and
+# auto-broadcast is off: a broadcast build is a SEPARATE job whose
+# dispatch costs more than shuffling those rows within the action's
+# own job, and maintenance joins hint shuffle-hash instead
+# (maint_small_side; guide §3.1 — pick the strategy deliberately).
+# Maintenance reads hand Spark explicit manifest-resolved FILE paths;
+# above 32 of them the reader launches a parallel listing JOB whose
+# dispatch (~120 ms) dwarfs the driver stat()ing a bounded file list.
+_SHRUNK_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "10000",
+}
+# root session -> {(n, root conf fingerprint): child session}, and
+# child -> weak ref to its root. Both hold sessions weakly, so a
+# dropped root session takes its children with it.
+_CHILDREN: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CHILD_ROOTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-@contextlib.contextmanager
-def maintenance_scope(spark: SparkSession, n: int | None, pin: bool = False):
-    """Scope the session to right-sized maintenance jobs.
+def maintenance_session(spark: SparkSession, n: int | None) -> SparkSession:
+    """The session a maintenance phase sized ``n`` runs its actions on.
 
-    The store's internal jobs (dirty-set collects, survivor
-    rewrites, span re-aggregation, manifest writes) run over ONE
-    batch + its dirty slice — usually orders of magnitude smaller
-    than the analytics queries the session is configured for. A
-    32-partition AQE plan on a 1500-row batch spends its wall time
-    on stage materialization and empty tasks, ~4x the query cost at
-    bench scale. So: when the right-sized partition count ``n`` is
-    below the session default — i.e. the batch is small and the
-    partition count is already right-sized, which is AQE
-    coalescing's whole job locally — run the maintenance with a
-    static ``n``-partition plan (AQE off). Big batches (``n`` >=
-    session default) leave the session untouched: full parallelism,
-    AQE skew-splitting, the 100 TB path.
+    The store's internal jobs (dirty-set collects, survivor rewrites,
+    span re-aggregation, manifest writes) run over ONE batch + its
+    dirty slice — usually orders of magnitude smaller than the
+    analytics queries the session is configured for. A 32-partition
+    AQE plan on a 1500-row batch spends its wall time on stage
+    materialization and empty tasks, ~4x the query cost at bench
+    scale. So when ``n`` is below ``spark``'s shuffle partitions, the
+    phase runs on a child session (``spark.newSession()``: same
+    SparkContext and cache manager, its own SQL conf) holding the
+    caller's conf with a static ``n``-partition plan, AQE off,
+    auto-broadcast off and no parallel file listing. ``n`` None or at
+    least the default returns ``spark`` itself: full parallelism, AQE
+    skew-splitting, the 100 TB path.
 
-    Nested scopes are no-ops while one is active (tracked
-    per-thread). ``pin=True`` (the user's explicit
-    ``maintenance_shuffle_partitions``) always applies ``n`` as the
-    maintenance partition count — raising as well as lowering —
-    and stays marked active so inner derived scopes cannot
-    override the explicit setting. A pin=True scope additionally
-    takes precedence over an active *derived* (non-pin) scope — a
-    view's explicit maintenance_shuffle_partitions applies even when
-    its execute() runs under an outer @_store_scoped /
-    @maintained scope (r12 advice) — and restores the outer scope's
-    conf on exit; only a pin under a pin no-ops.
-
-    The session conf is SESSION-global state, so a module-level
-    lock serializes modifying scopes across views/threads sharing
-    one SparkSession: two concurrently maintained views can no
-    longer interleave set/restore and leave the maintenance value
-    pinned. Analytics queries issued on the same session DURING a
-    maintenance window still see the maintenance conf — run them
-    on ``spark.newSession()`` (shares the cluster, isolates conf)
-    if that matters."""
-    conf = spark.conf
-    prev_active = getattr(_CONF_SCOPE_TLS, "active", False)
-    prev_pinned = getattr(_CONF_SCOPE_TLS, "pinned", False)
-    prev_small = getattr(_CONF_SCOPE_TLS, "small", False)
-    # A nested scope no-ops while one is active — EXCEPT a pin=True
-    # scope under a derived (non-pin) scope: the explicit view-level
-    # setting wins over the outer heuristic and restores it on exit.
-    if n is None or (prev_active and not (pin and not prev_pinned)):
-        yield
-        return
-    _CONF_SCOPE_LOCK.acquire()
-    held = True
+    A child is configured once, cached per (root session, ``n``,
+    fingerprint of the root's conf) and never changed afterwards, so
+    the caller's session is never touched and concurrent phases need
+    no lock. A phase runs on the child by reading through it and
+    rebinding its frames with :func:`on_session`. Passing a child
+    back in compares ``n`` against the child's own conf: a nested
+    phase can shrink further but never widens back."""
+    if n is None:
+        return spark
     try:
-        try:
-            default = int(conf.get("spark.sql.shuffle.partitions"))
-        except Exception:  # noqa: BLE001 — unusual session config
-            default = None
-        modify = default is not None and (n < default if not pin else True)
-        if not modify and not pin:
-            _CONF_SCOPE_LOCK.release()
-            held = False
-            yield
-            return
-        old_aqe = None
-        old_bcast = None
-        old_disc = None
-        shrank = modify and default is not None and n < default
-        if modify:
-            old_aqe = conf.get("spark.sql.adaptive.enabled")
-            conf.set("spark.sql.shuffle.partitions", str(n))
-            if shrank:
-                conf.set("spark.sql.adaptive.enabled", "false")
-                # Inside a shrunken scope every join side is bounded
-                # (one batch + its dirty slice): a broadcast build is a
-                # SEPARATE job whose dispatch costs more than shuffling
-                # those rows within the action's own job, so turn
-                # auto-broadcast off; maintenance joins consult
-                # scope_is_small() and hint shuffle-hash instead
-                # (guide §3.1 — pick the strategy deliberately).
-                old_bcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
-                conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-                # Maintenance reads hand Spark explicit manifest-resolved
-                # FILE paths; above 32 of them the reader launches a
-                # parallel listing JOB (parallelPartitionDiscovery) whose
-                # dispatch (~120 ms) dwarfs the driver stat()ing a
-                # shrunken scope's bounded file list. Unscoped (at-scale)
-                # reads keep the session default — a 100 TB table's
-                # listing still parallelizes.
-                old_disc = conf.get(
-                    "spark.sql.sources.parallelPartitionDiscovery.threshold"
-                )
-                conf.set(
-                    "spark.sql.sources.parallelPartitionDiscovery.threshold",
-                    "10000",
-                )
-        _CONF_SCOPE_TLS.active = True
-        _CONF_SCOPE_TLS.pinned = pin
-        _CONF_SCOPE_TLS.small = shrank
-        try:
-            yield
-        finally:
-            _CONF_SCOPE_TLS.active = prev_active
-            _CONF_SCOPE_TLS.pinned = prev_pinned
-            _CONF_SCOPE_TLS.small = prev_small
-            if modify:
-                conf.set("spark.sql.shuffle.partitions", str(default))
-                if old_aqe is not None:
-                    conf.set("spark.sql.adaptive.enabled", old_aqe)
-                if old_bcast is not None:
-                    conf.set(
-                        "spark.sql.autoBroadcastJoinThreshold", old_bcast
-                    )
-                if old_disc is not None:
-                    conf.set(
-                        "spark.sql.sources.parallelPartitionDiscovery"
-                        ".threshold",
-                        old_disc,
-                    )
-    finally:
-        if held:
-            _CONF_SCOPE_LOCK.release()
+        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:  # noqa: BLE001 — unusual session config
+        return spark
+    if n >= default:
+        return spark
+    root = _CHILD_ROOTS[spark]() if spark in _CHILD_ROOTS else spark
+    conf_id = root._jsparkSession.sessionState().conf().getAllConfs().hashCode()
+    children = _CHILDREN.setdefault(root, {})
+    child = children.get((n, conf_id))
+    if child is None:
+        child = root.newSession()
+        for k, v in root.conf.getAll.items():
+            if root.conf.isModifiable(k):
+                child.conf.set(k, v)
+        child.conf.set("spark.sql.shuffle.partitions", str(n))
+        for k, v in _SHRUNK_CONF.items():
+            child.conf.set(k, v)
+        # two threads may race to create the same child: keep one
+        child = children.setdefault((n, conf_id), child)
+        _CHILD_ROOTS[child] = weakref.ref(root)
+    return child
 
+
+def on_session(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan bound to ``spark``: actions on the result plan and
+    run under ``spark``'s conf. No job; cached plans still hit (the
+    cache manager is shared by every session of a SparkContext). A
+    plan always runs under the conf of the frame it is executed from,
+    so a phase rebinds whatever it collects or writes."""
+    if df.sparkSession is spark:
+        return df
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jds, spark)
 
 
 # Engine bookkeeping columns stamped onto every map output; user map
@@ -439,7 +420,6 @@ class MapReduceView:
         two_level: bool | None = None,
         n_sub_buckets: int = 8,
         migrate_span_hash: bool = False,
-        maintenance_shuffle_partitions: int | None = None,
         auto_compact_files_per_span: int | None = 16,
     ):
         if (agg_exprs is None) == (reduce_fn is None):
@@ -467,12 +447,6 @@ class MapReduceView:
             two_level = _rereduce_closed(self.agg_exprs)
         self.n_key_spans = n_key_spans
         self.n_doc_spans = n_doc_spans
-        # Maintenance jobs are right-sized per batch (see
-        # :meth:`_conf_scope`): an explicit value here pins every
-        # phase; otherwise the probe phase uses the previous batch's
-        # hint and the heavy phase is sized from the current batch +
-        # dirty-pair file bytes.
-        self.maintenance_shuffle_partitions = maintenance_shuffle_partitions
         # Append-heavy ingest degrades ~linearly in accumulated sliver
         # files (measured: 60 insert batches -> 3,840 map slivers, the
         # NEXT batch 9.4s vs 1.6s compacted — tools/scale_compact.py),
@@ -733,11 +707,6 @@ class MapReduceView:
             if os.path.exists(os.path.join(table.path, f))
         )
 
-    def _conf_scope(self, n: int | None, pin: bool = False):
-        """Delegates to :func:`maintenance_scope` (module-level so the
-        JoinView shares the same lock/TLS and shrink-only semantics)."""
-        return maintenance_scope(self.spark, n, pin)
-
     # ----- journal / meta --------------------------------------------------
 
     def _meta(self) -> dict:
@@ -812,7 +781,7 @@ class MapReduceView:
                 self._l1_t.commit(
                     replace=l1_map, drop=dirty - set(l1_map)
                 )
-                fin_map = self._write_finals_from_l1(l1_map)
+                fin_map = self._write_finals_from_l1(l1_map, self.spark)
             else:
                 if self.agg_exprs is not None:
                     finals = content.groupBy("kspan", *self.group_cols).agg(
@@ -933,10 +902,7 @@ class MapReduceView:
             return df
 
         try:
-            with self._conf_scope(
-                self.maintenance_shuffle_partitions, pin=True
-            ):
-                self._apply_inner(ids, mapped, cache, src_width)
+            self._apply_inner(ids, mapped, cache, src_width)
         finally:
             for df in cached:
                 df.unpersist()
@@ -950,23 +916,23 @@ class MapReduceView:
     ) -> None:
         # Size the batch's CACHED PLANS from its scan width —
         # driver-side plan metadata, no job. A cache() captures its
-        # physical plan at REGISTRATION conf, so registering under the
-        # session's full-width AQE conf makes every later scoped
-        # action that materializes the cache replay a 3-job AQE stage
-        # cascade for a few thousand rows. A 100 TB batch's wide scan
-        # keeps the session's full-parallelism AQE plan (guide §2.2:
-        # size partitions from the data, not a constant).
+        # physical plan under the conf of the frame it is registered
+        # from, so registering on the session's full-width AQE conf
+        # makes every later right-sized action that materializes the
+        # cache replay a 3-job AQE stage cascade for a few thousand
+        # rows. A 100 TB batch's wide scan keeps the session's
+        # full-parallelism AQE plan (guide §2.2: size partitions from
+        # the data, not a constant).
         batch_n = (
             None if src_width is None
             else max(self._MIN_PARTITIONS, src_width)
         )
-        with self._conf_scope(batch_n):
-            cache(ids)
-            # The mapped batch feeds several downstream plans (span
-            # discovery, map_results content, doc_index content);
-            # batches are bounded, so caching beats recomputing the
-            # user map.
-            cache(mapped)
+        bs = maintenance_session(self.spark, batch_n)
+        ids = cache(on_session(ids, bs))
+        # The mapped batch feeds several downstream plans (span
+        # discovery, map_results content, doc_index content); batches
+        # are bounded, so caching beats recomputing the user map.
+        mapped = cache(on_session(mapped, bs))
 
         # --- bootstrap fast path: a completely fresh store cannot hold
         # prior versions of any incoming doc, so the whole invalidation
@@ -974,8 +940,7 @@ class MapReduceView:
         # provably a no-op — write everything, derive the dirty spans
         # from the write mappings themselves.
         if not self._map_t.spans() and not self._idx_t.spans():
-            with self._conf_scope(batch_n):
-                self._bootstrap(mapped, cache)
+            self._bootstrap(mapped, bs)
             return
 
         # --- dirty sets (reference: ScheduleReduction, Executer.cs:115-151)
@@ -990,8 +955,9 @@ class MapReduceView:
         # lookup is folded INTO the probe — one collect instead of two;
         # the two-phase pruned path remains the at-scale plan.
         bucket_of = self._bucket(F.col("uid"))
+        ps = maintenance_session(self.spark, self._hint_partitions())
         small_idx = self._idx_t.stats()["bytes"] < self._SMALL_INDEX_BYTES
-        idx_all = self._idx_t.read(self.spark) if small_idx else None
+        idx_all = self._idx_t.read(ps) if small_idx else None
         new_kspans: set[int] = set()
         old_kspans: set[int] = set()
         new_pspans: set[int] = set()
@@ -1007,43 +973,41 @@ class MapReduceView:
         # (map-side partial aggregation over a few thousand distinct
         # tuples), but the counts measure the batch for free — the 'k'
         # rows sum to the mapped row count, so no separate count job.
-        # The probe plan is CONSTRUCTED inside the scope so
-        # maint_small_side sees the shrunken-scope TLS and plans the
-        # folded index lookup as a shuffle-hash join — construction
-        # outside picked the at-scale broadcast hint, whose build is a
-        # separate dispatch-only job per batch (r12 advice item 3).
-        with self._conf_scope(self._hint_partitions()):
-            ids_d = ids.withColumn("dspan", self._dspan(F.col("uid")))
-            probe = mapped.select(
-                F.lit("k").alias("t"),
-                F.col("kspan").alias("v"),
-                F.col("bucket").alias("b"),
+        # The folded index lookup is hinted for the session that runs
+        # the probe: shuffle-hash on a shrunken session, where the
+        # at-scale broadcast build would be a separate dispatch-only
+        # job per batch (r12 advice item 3).
+        ids_d = ids.withColumn("dspan", self._dspan(F.col("uid")))
+        probe = on_session(mapped, ps).select(
+            F.lit("k").alias("t"),
+            F.col("kspan").alias("v"),
+            F.col("bucket").alias("b"),
+        )
+        if idx_all is not None:
+            probe = probe.unionByName(
+                idx_all.join(
+                    maint_small_side(ids_d, ps), ["dspan", "uid"], "inner"
+                ).select(
+                    F.lit("o").alias("t"),
+                    F.col("kspan").alias("v"),
+                    bucket_of.alias("b"),
+                )
             )
-            if idx_all is not None:
-                probe = probe.unionByName(
-                    idx_all.join(
-                        maint_small_side(ids_d), ["dspan", "uid"], "inner"
-                    ).select(
-                        F.lit("o").alias("t"),
-                        F.col("kspan").alias("v"),
-                        bucket_of.alias("b"),
-                    )
+        else:
+            # Two-phase path only: the ids' doc-spans drive the pruned
+            # doc_index read in _apply_rest. With the lookup folded
+            # above, batch_dspans is never consulted — skip the branch
+            # (one fewer probe input scan).
+            probe = probe.unionByName(
+                ids_d.select(
+                    F.lit("d").alias("t"),
+                    F.col("dspan").alias("v"),
+                    F.lit(0).alias("b"),
                 )
-            else:
-                # Two-phase path only: the ids' doc-spans drive the
-                # pruned doc_index read in _apply_rest. With the lookup
-                # folded above, batch_dspans is never consulted — skip
-                # the branch (one fewer probe input scan).
-                probe = probe.unionByName(
-                    ids_d.select(
-                        F.lit("d").alias("t"),
-                        F.col("dspan").alias("v"),
-                        F.lit(0).alias("b"),
-                    )
-                )
-            probe_rows = probe.groupBy("t", "v", "b").agg(
-                F.count(F.lit(1)).alias("c")
-            ).collect()
+            )
+        probe_rows = probe.groupBy("t", "v", "b").agg(
+            F.count(F.lit(1)).alias("c")
+        ).collect()
         n_mapped = 0
         for r in probe_rows:
             if r.t == "d":
@@ -1058,7 +1022,7 @@ class MapReduceView:
                 tgt[1].add(r.v * self.n_sub_buckets + r.b)
         self._apply_rest(
             ids, mapped, cache, new_kspans, old_kspans, new_pspans,
-            old_pspans, batch_dspans, bucket_of, ids_d,
+            old_pspans, batch_dspans, bucket_of, ids_d, ps,
             n_mapped=n_mapped,
             lookup_done=idx_all is not None,
         )
@@ -1069,7 +1033,7 @@ class MapReduceView:
     _SMALL_INDEX_BYTES = 64 * 1024 * 1024
 
     def _write_finals_from_l1(
-        self, l1_map: dict[int, list[str]]
+        self, l1_map: dict[int, list[str]], spark: SparkSession
     ) -> dict[int, list[str]]:
         """Two-level finals: re-reduce the L1 files a just-finished
         write job landed (uncommitted but on disk — write_data returns
@@ -1085,17 +1049,13 @@ class MapReduceView:
         if not files:
             return {}
         finals = (
-            self.spark.read.parquet(*files)
+            spark.read.parquet(*files)
             .groupBy("kspan", *self.group_cols)
             .agg(*self.agg_exprs)
         )
         return self._fin_t.write_data(finals)
 
-    def _bootstrap(
-        self,
-        mapped: DataFrame,
-        cache: Callable[[DataFrame], DataFrame],
-    ) -> None:
+    def _bootstrap(self, mapped: DataFrame, spark: SparkSession) -> None:
         """First batch into an empty store: the map write runs first
         (one job — it materializes the cached batch for the index/
         finals consumers, and its footer metadata says whether the
@@ -1103,7 +1063,8 @@ class MapReduceView:
         job), then the index and finals/L1 writes run concurrently;
         the journal (derived from the write mappings) precedes the
         first commit, so crash recovery converges exactly as in the
-        general path."""
+        general path. ``mapped`` is bound to ``spark``, the session the
+        batch's writes run on."""
         meta = self._meta()
         data_cols = [c for c in mapped.columns if c != "pspan"]
         new_rows = mapped.select(*data_cols, F.col("pspan"))
@@ -1130,9 +1091,7 @@ class MapReduceView:
                 for fs in results["map"].values()
                 for f in fs
             ]
-            content = self.spark.read.schema(self._map_t._schema).parquet(
-                *files
-            )
+            content = spark.read.schema(self._map_t._schema).parquet(*files)
             if self.agg_exprs is not None:
                 finals = content.groupBy("kspan", *self.group_cols).agg(
                     *self.agg_exprs
@@ -1170,7 +1129,7 @@ class MapReduceView:
         if errors:
             raise next(iter(errors.values()))
         if self.two_level:
-            results["fin"] = self._write_finals_from_l1(results["l1"])
+            results["fin"] = self._write_finals_from_l1(results["l1"], spark)
         dirty_kspans = {
             p // self.n_sub_buckets for p in results["map"]
         } | set(results["fin"])
@@ -1201,6 +1160,7 @@ class MapReduceView:
         batch_dspans: set[int],
         bucket_of: Column,
         ids_d: DataFrame,
+        ps: SparkSession,
         n_mapped: int = 0,
         lookup_done: bool = False,
     ) -> None:
@@ -1208,24 +1168,22 @@ class MapReduceView:
         idx = (
             None
             if lookup_done
-            else self._idx_t.read(self.spark, spans=batch_dspans)
+            else self._idx_t.read(ps, spans=batch_dspans)
         )
         if idx is not None:
-            # Distinct-over-span-ids like the probe: safe under the
-            # previous batch's sizing hint at any batch size. Plan
-            # construction inside the scope so maint_small_side plans
-            # for the scope that executes it (r12 advice item 3).
-            with self._conf_scope(self._hint_partitions()):
-                old_locs = idx.join(
-                    maint_small_side(ids_d), ["dspan", "uid"], "inner"
+            # Distinct-over-span-ids like the probe: safe on the probe
+            # session (the previous batch's sizing hint) at any batch
+            # size, and hinted for that session (r12 advice item 3).
+            old_locs = idx.join(
+                maint_small_side(ids_d, ps), ["dspan", "uid"], "inner"
+            )
+            old_rows = (
+                old_locs.select(
+                    F.col("kspan").alias("v"), bucket_of.alias("b")
                 )
-                old_rows = (
-                    old_locs.select(
-                        F.col("kspan").alias("v"), bucket_of.alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
+                .distinct()
+                .collect()
+            )
             for r in old_rows:
                 old_kspans.add(r.v)
                 old_pspans.add(r.v * self.n_sub_buckets + r.b)
@@ -1254,188 +1212,190 @@ class MapReduceView:
                 self._map_t, self._map_pspans(dirty_kspans)
             ),
         )
-        with self._conf_scope(heavy_n):
-            # --- classify dirty pairs
-            # (reference: PersistMap + delete of replaced docs,
-            # Executer.cs:165-183, 258 — its MapResults/<key>/<bucket>/
-            # tree is exactly this granularity)
-            #
-            #   rewrite pairs = pairs holding a replaced doc ("o"-tagged
-            #     via the index; the index never loses an entry, so a pair
-            #     absent from ``old_pspans`` provably holds no prior
-            #     version of any incoming doc) — survivors must be
-            #     filtered out, so the pair's file set is replaced.
-            #   every other dirty pair only gains brand-new rows: an
-            #     O(batch) *append* of new files. Rewrite amplification is
-            #     therefore bounded by the doc-bucket — a small upsert into
-            #     a giant group rewrites corpus/(n_key_spans*n_sub_buckets)
-            #     bytes, never O(group) — and insert-heavy ingest (the
-            #     dominant 100 TB regime) pays no rewrite at all.
-            all_pspans = set(self._map_t.spans())
-            rewrite_pspans = old_pspans & all_pspans  # stale entries: no files
-            append_pspans = new_pspans - rewrite_pspans
-            data_cols = [c for c in mapped.columns if c != "pspan"]
-            new_rows = mapped.select(*data_cols, F.col("pspan"))
-            existing_dirty = self._map_t.read(
-                self.spark, spans=dirty_pspans & all_pspans
-            )
-            if existing_dirty is not None:
-                survivors = existing_dirty
-                if rewrite_pspans:
-                    survivors = survivors.join(maint_small_side(ids), "uid", "left_anti")
-                pair_rows = survivors.select(new_rows.columns).unionByName(new_rows)
-            else:
-                pair_rows = new_rows
-            # Two-level mode consumes ``pair_rows`` twice (the map write
-            # and the L1 partial recompute) — cache it so the second
-            # consumer reads columnar cache, populated by whichever job
-            # scans it first. Single-level consumes it exactly ONCE (the
-            # map write; finals re-reduce the just-written files below),
-            # so there is no cache and no materializing count job —
-            # the r12 ``pair_rows.count()`` is gone (guide §1.2).
-            if self.two_level:
-                cache(pair_rows)
-
-            # --- re-aggregate only dirty state
-            # (reference: ExecuteReduce over scheduled spans,
-            # Executer.cs:47-85). Two-level: the reduce tree is
-            # *materialized* — the dirty pairs' partials recompute from
-            # ``pair_rows`` (already exactly the dirty pairs' data: the
-            # manifest pruned the read to those files) and finals re-reduce
-            # the span's partials (the reference's BucketId/BatchSize
-            # grouping, Executer.cs:62, with strictly finer dirty
-            # granularity). Single-level: Catalyst's partial+final
-            # HashAggregate is the reduce tree, re-run over the dirty
-            # key-spans' FILES — the just-written replacement/append files
-            # plus the spans' retained committed files — exactly like the
-            # two-level finals re-reduce the just-written L1 files
-            # (_write_finals_from_l1): reading tiny page-cache-warm
-            # columnar state back beats a cache + materializing count.
-            l1_content = None
-            if self.two_level:
-                pairs_by_span: dict[int, list[int]] = {}
-                for p in sorted(dirty_pspans):
-                    pairs_by_span.setdefault(p // self.n_sub_buckets, []).append(
-                        p % self.n_sub_buckets
-                    )
-                dirty_pred = self._pair_pred(pairs_by_span)
-                l1_existing = self._l1_t.read(self.spark, spans=dirty_kspans)
-                recomputed = pair_rows.groupBy(
-                    "kspan", "bucket", *self.group_cols
-                ).agg(*self.agg_exprs)
-                if l1_existing is not None:
-                    l1_surv = l1_existing.filter(~dirty_pred)
-                    l1_content = l1_surv.select(recomputed.columns).unionByName(
-                        recomputed
-                    )
-                else:
-                    l1_content = recomputed
-
-            # --- write the map table FIRST (one job covers the whole
-            # table: append pairs land only the batch's new rows,
-            # rewrite pairs land their full replacement content —
-            # survivors + batch; the two slices are disjoint by pspan,
-            # and the commit splits the mapping by pair class). Running
-            # it before the finals lets the finals re-reduce the
-            # written files; in two-level mode it also materializes the
-            # pair_rows cache for the L1 recompute. (NB ``pair_rows``
-            # also holds existing rows of append-class pairs — read for
-            # the re-aggregation — which must NOT be rewritten, hence
-            # the slice-and-union rather than writing ``pair_rows``.)
-            map_write_pspans = append_pspans | rewrite_pspans
-            slices = []
+        hs = maintenance_session(self.spark, heavy_n)
+        # --- classify dirty pairs
+        # (reference: PersistMap + delete of replaced docs,
+        # Executer.cs:165-183, 258 — its MapResults/<key>/<bucket>/
+        # tree is exactly this granularity)
+        #
+        #   rewrite pairs = pairs holding a replaced doc ("o"-tagged
+        #     via the index; the index never loses an entry, so a pair
+        #     absent from ``old_pspans`` provably holds no prior
+        #     version of any incoming doc) — survivors must be
+        #     filtered out, so the pair's file set is replaced.
+        #   every other dirty pair only gains brand-new rows: an
+        #     O(batch) *append* of new files. Rewrite amplification is
+        #     therefore bounded by the doc-bucket — a small upsert into
+        #     a giant group rewrites corpus/(n_key_spans*n_sub_buckets)
+        #     bytes, never O(group) — and insert-heavy ingest (the
+        #     dominant 100 TB regime) pays no rewrite at all.
+        all_pspans = set(self._map_t.spans())
+        rewrite_pspans = old_pspans & all_pspans  # stale entries: no files
+        append_pspans = new_pspans - rewrite_pspans
+        data_cols = [c for c in mapped.columns if c != "pspan"]
+        new_rows = on_session(mapped, hs).select(*data_cols, F.col("pspan"))
+        existing_dirty = self._map_t.read(
+            hs, spans=dirty_pspans & all_pspans
+        )
+        if existing_dirty is not None:
+            survivors = existing_dirty
             if rewrite_pspans:
-                slices.append(
-                    pair_rows.filter(F.col("pspan").isin(sorted(rewrite_pspans)))
+                survivors = survivors.join(
+                    maint_small_side(ids, hs), "uid", "left_anti"
                 )
-            if append_pspans:
-                slices.append(
-                    new_rows.filter(F.col("pspan").isin(sorted(append_pspans)))
+            pair_rows = survivors.select(new_rows.columns).unionByName(new_rows)
+        else:
+            pair_rows = new_rows
+        # Two-level mode consumes ``pair_rows`` twice (the map write
+        # and the L1 partial recompute) — cache it so the second
+        # consumer reads columnar cache, populated by whichever job
+        # scans it first. Single-level consumes it exactly ONCE (the
+        # map write; finals re-reduce the just-written files below),
+        # so there is no cache and no materializing count job —
+        # the r12 ``pair_rows.count()`` is gone (guide §1.2).
+        if self.two_level:
+            cache(pair_rows)
+
+        # --- re-aggregate only dirty state
+        # (reference: ExecuteReduce over scheduled spans,
+        # Executer.cs:47-85). Two-level: the reduce tree is
+        # *materialized* — the dirty pairs' partials recompute from
+        # ``pair_rows`` (already exactly the dirty pairs' data: the
+        # manifest pruned the read to those files) and finals re-reduce
+        # the span's partials (the reference's BucketId/BatchSize
+        # grouping, Executer.cs:62, with strictly finer dirty
+        # granularity). Single-level: Catalyst's partial+final
+        # HashAggregate is the reduce tree, re-run over the dirty
+        # key-spans' FILES — the just-written replacement/append files
+        # plus the spans' retained committed files — exactly like the
+        # two-level finals re-reduce the just-written L1 files
+        # (_write_finals_from_l1): reading tiny page-cache-warm
+        # columnar state back beats a cache + materializing count.
+        l1_content = None
+        if self.two_level:
+            pairs_by_span: dict[int, list[int]] = {}
+            for p in sorted(dirty_pspans):
+                pairs_by_span.setdefault(p // self.n_sub_buckets, []).append(
+                    p % self.n_sub_buckets
                 )
-            map_rows = slices[0] if len(slices) == 1 else (
-                slices[0].unionByName(slices[1]) if slices else None
+            dirty_pred = self._pair_pred(pairs_by_span)
+            l1_existing = self._l1_t.read(hs, spans=dirty_kspans)
+            recomputed = pair_rows.groupBy(
+                "kspan", "bucket", *self.group_cols
+            ).agg(*self.agg_exprs)
+            if l1_existing is not None:
+                l1_surv = l1_existing.filter(~dirty_pred)
+                l1_content = l1_surv.select(recomputed.columns).unionByName(
+                    recomputed
+                )
+            else:
+                l1_content = recomputed
+
+        # --- write the map table FIRST (one job covers the whole
+        # table: append pairs land only the batch's new rows,
+        # rewrite pairs land their full replacement content —
+        # survivors + batch; the two slices are disjoint by pspan,
+        # and the commit splits the mapping by pair class). Running
+        # it before the finals lets the finals re-reduce the
+        # written files; in two-level mode it also materializes the
+        # pair_rows cache for the L1 recompute. (NB ``pair_rows``
+        # also holds existing rows of append-class pairs — read for
+        # the re-aggregation — which must NOT be rewritten, hence
+        # the slice-and-union rather than writing ``pair_rows``.)
+        map_write_pspans = append_pspans | rewrite_pspans
+        slices = []
+        if rewrite_pspans:
+            slices.append(
+                pair_rows.filter(F.col("pspan").isin(sorted(rewrite_pspans)))
             )
-            results: dict[str, dict[int, list[str]]] = {}
-            results["map"] = (
-                self._map_t.write_data(map_rows) if map_write_pspans else {}
+        if append_pspans:
+            slices.append(
+                new_rows.filter(F.col("pspan").isin(sorted(append_pspans)))
             )
+        map_rows = slices[0] if len(slices) == 1 else (
+            slices[0].unionByName(slices[1]) if slices else None
+        )
+        results: dict[str, dict[int, list[str]]] = {}
+        results["map"] = (
+            self._map_t.write_data(map_rows) if map_write_pspans else {}
+        )
 
-            # Single-level finals: re-reduce the dirty key-spans' map
-            # FILES — the files the write above just landed plus the
-            # spans' retained (non-rewritten) committed files.
-            finals = None
-            if not self.two_level:
-                retained_pspans = {
-                    p
-                    for p in all_pspans
-                    if p // self.n_sub_buckets in dirty_kspans
-                } - rewrite_pspans
-                pieces = []
-                new_files = [
-                    os.path.join(self._map_t.path, f)
-                    for fs in results["map"].values()
-                    for f in fs
-                ]
-                if new_files:
-                    pieces.append(
-                        self.spark.read.schema(self._map_t._schema)
-                        .parquet(*new_files)
-                        .select(new_rows.columns)
-                    )
-                retained = self._map_t.read(self.spark, spans=retained_pspans)
-                if retained is not None:
-                    pieces.append(retained.select(new_rows.columns))
-                if pieces:
-                    content = (
-                        pieces[0]
-                        if len(pieces) == 1
-                        else pieces[0].unionByName(pieces[1])
-                    )
-                    if self.agg_exprs is not None:
-                        finals = content.groupBy(
-                            "kspan", *self.group_cols
-                        ).agg(*self.agg_exprs)
-                    else:
-                        finals = content.groupBy(
-                            "kspan", *self.group_cols
-                        ).applyInPandas(
-                            self.reduce_fn,
-                            schema=f"kspan int, {self.reduce_schema}",
-                        )
-
-            # --- remaining data-file writes run concurrently
-            # (invisible until commit): the doc-index write and the
-            # finals (single-level) or L1 partials (two-level) write
-            # are independent jobs on concurrent driver threads.
-            new_idx = mapped.select("uid", "kspan", "dspan").distinct()
-            errors: dict[str, BaseException] = {}
-
-            def _run(name: str, fn: Callable[[], dict[int, list[str]]]) -> None:
-                try:
-                    results[name] = fn()
-                except BaseException as e:  # noqa: BLE001 — re-raised below
-                    errors[name] = e
-
-            jobs: list[tuple[str, Callable[[], dict[int, list[str]]]]] = [
-                ("idx", lambda: self._idx_t.write_data(new_idx)),
+        # Single-level finals: re-reduce the dirty key-spans' map
+        # FILES — the files the write above just landed plus the
+        # spans' retained (non-rewritten) committed files.
+        finals = None
+        if not self.two_level:
+            retained_pspans = {
+                p
+                for p in all_pspans
+                if p // self.n_sub_buckets in dirty_kspans
+            } - rewrite_pspans
+            pieces = []
+            new_files = [
+                os.path.join(self._map_t.path, f)
+                for fs in results["map"].values()
+                for f in fs
             ]
-            if finals is not None:
-                jobs.append(("fin", lambda: self._fin_t.write_data(finals)))
-            if l1_content is not None:
-                jobs.append(("l1", lambda: self._l1_t.write_data(l1_content)))
-            threads = [
-                threading.Thread(target=_run, args=(n, fn), daemon=True)
-                for n, fn in jobs
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errors:
-                raise next(iter(errors.values()))
-            if self.two_level:
-                results["fin"] = self._write_finals_from_l1(results["l1"])
-            results.setdefault("fin", {})
+            if new_files:
+                pieces.append(
+                    hs.read.schema(self._map_t._schema)
+                    .parquet(*new_files)
+                    .select(new_rows.columns)
+                )
+            retained = self._map_t.read(hs, spans=retained_pspans)
+            if retained is not None:
+                pieces.append(retained.select(new_rows.columns))
+            if pieces:
+                content = (
+                    pieces[0]
+                    if len(pieces) == 1
+                    else pieces[0].unionByName(pieces[1])
+                )
+                if self.agg_exprs is not None:
+                    finals = content.groupBy(
+                        "kspan", *self.group_cols
+                    ).agg(*self.agg_exprs)
+                else:
+                    finals = content.groupBy(
+                        "kspan", *self.group_cols
+                    ).applyInPandas(
+                        self.reduce_fn,
+                        schema=f"kspan int, {self.reduce_schema}",
+                    )
+
+        # --- remaining data-file writes run concurrently
+        # (invisible until commit): the doc-index write and the
+        # finals (single-level) or L1 partials (two-level) write
+        # are independent jobs on concurrent driver threads.
+        new_idx = new_rows.select("uid", "kspan", "dspan").distinct()
+        errors: dict[str, BaseException] = {}
+
+        def _run(name: str, fn: Callable[[], dict[int, list[str]]]) -> None:
+            try:
+                results[name] = fn()
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                errors[name] = e
+
+        jobs: list[tuple[str, Callable[[], dict[int, list[str]]]]] = [
+            ("idx", lambda: self._idx_t.write_data(new_idx)),
+        ]
+        if finals is not None:
+            jobs.append(("fin", lambda: self._fin_t.write_data(finals)))
+        if l1_content is not None:
+            jobs.append(("l1", lambda: self._l1_t.write_data(l1_content)))
+        threads = [
+            threading.Thread(target=_run, args=(n, fn), daemon=True)
+            for n, fn in jobs
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        if errors:
+            raise next(iter(errors.values()))
+        if self.two_level:
+            results["fin"] = self._write_finals_from_l1(results["l1"], hs)
+        results.setdefault("fin", {})
 
         # --- commit (atomic manifest swaps, dependency order; see
         # module docstring for why the index leads)
@@ -1675,35 +1635,37 @@ class MapReduceView:
         unreferenced (reclaim via ``vacuum()``). Returns the number of
         pairs compacted. At 100 TB scale this is the maintenance job a
         table service would schedule off-peak."""
-        # Scoped like every other maintenance job: sized from the map
+        # Right-sized like every other maintenance job: from the map
         # table's on-disk bytes (manifest metadata — an upper bound on
         # the rewrite's input), so a bench-scale compaction is one
         # static small plan instead of an AQE stage cascade, and a big
         # table keeps full parallelism.
-        with self._conf_scope(
-            self._size_partitions(0, file_bytes=self._map_t.stats()["bytes"])
-        ):
-            return self._map_t.compact(self.spark, min_files=min_files)[
-                "spans_compacted"
-            ]
+        spark = maintenance_session(
+            self.spark,
+            self._size_partitions(0, file_bytes=self._map_t.stats()["bytes"]),
+        )
+        return self._map_t.compact(spark, min_files=min_files)[
+            "spans_compacted"
+        ]
 
     def compact_index(self) -> None:
         """Rewrite doc_index from the map_results source of truth,
         dropping stale entries (docs that moved key-spans). Run
         opportunistically — correctness never requires it; stale
         entries only over-dirty recomputation."""
-        live = self._map_t.read(self.spark)
-        if live is None:
-            return
-        with self._conf_scope(
+        spark = maintenance_session(
+            self.spark,
             self._size_partitions(
                 0,
                 file_bytes=self._map_t.stats()["bytes"]
                 + self._idx_t.stats()["bytes"],
-            )
-        ):
-            fresh = live.select("uid", "kspan", "dspan").distinct()
-            mapping = self._idx_t.write_data(fresh)
+            ),
+        )
+        live = self._map_t.read(spark)
+        if live is None:
+            return
+        fresh = live.select("uid", "kspan", "dspan").distinct()
+        mapping = self._idx_t.write_data(fresh)
         self._idx_t.commit(replace_all=mapping)
         self._idx_t.vacuum()
 
